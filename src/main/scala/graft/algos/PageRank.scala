@@ -1,7 +1,7 @@
 package graft.algos
 
 import graft.core.{CheckpointStore, Csr, Iterate, LinkGraph}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** PageRank by power iteration over the edge table.
@@ -146,15 +146,20 @@ object PageRank {
         require(n > 0, "empty graph")
         val idx = new java.util.HashMap[Long, Int](n * 2)
         vids.zipWithIndex.foreach { case (id, i) => idx.put(id, i) }
+        // with numVertices set, an endpoint outside 0..n-1 has no slot
+        def slot(id: Long): Int = {
+          require(idx.containsKey(id), s"edge endpoint $id is outside the vertex ids 0..${n - 1} (n = $n)")
+          idx.get(id)
+        }
         val outw = new Array[Double](n)
-        rows.foreach(r => outw(idx.get(r.getLong(0))) += r.getDouble(2))
+        rows.foreach(r => outw(slot(r.getLong(0))) += r.getDouble(2))
         val src = new Array[Int](rows.length)
         val dst = new Array[Int](rows.length)
         val p = new Array[Double](rows.length)
         var i = 0
         while (i < rows.length) {
           val r = rows(i)
-          src(i) = idx.get(r.getLong(0)); dst(i) = idx.get(r.getLong(1))
+          src(i) = slot(r.getLong(0)); dst(i) = slot(r.getLong(1))
           p(i) = r.getDouble(2) / outw(src(i))
           i += 1
         }
@@ -299,14 +304,18 @@ object PageRank {
     // (Chaining soft cuts across iterations nests InMemoryRelations, whose
     // plan *description* — built for every SQL-execution event — expands
     // shared subtrees and grows exponentially: observed as explainString OOM.)
-    // Tolerance mode fuses the convergence delta into the SAME job that
-    // materializes the cut: the previous rank rides along as an extra
-    // column, so the delta is a cached-scan aggregate instead of a separate
-    // shuffle join of two rank snapshots per superstep (round-2 verdict:
-    // the per-iteration driver-action count is the serial floor that caps
-    // scaling efficiency). Durable-store runs keep the two-job shape so the
-    // checkpoint schema stays (id, rank).
-    val fuseDelta = checkConvergence && store.isEmpty
+    // Tolerance mode fuses the convergence delta into the SAME execution
+    // that materializes the cut: the previous rank rides along as an extra
+    // column (`__old`), so no separate shuffle join of two rank snapshots
+    // runs per superstep (round-2 verdict: the per-iteration driver-action
+    // count is the serial floor that caps scaling efficiency). In memory,
+    // the delta is a cached-scan aggregate over the checkpoint. A durable
+    // run observes it instead (`Dataset.observe`) inside the snapshot write
+    // itself and projects `__old` away before writing, so the checkpoint
+    // schema stays (id, rank) and the delta costs no job of its own. The
+    // in-memory cut is an RDD action (`localCheckpoint`), which reports no
+    // observed metrics, hence the two ways of reading one fused delta.
+    val deltaOf = max(abs(col("rank") - coalesce(col("__old"), col("rank"))))
     // Fixed-iteration in-memory runs don't need a per-superstep barrier: the
     // rank state is referenced exactly ONCE per superstep (the message join),
     // so the uncut plan grows linearly, not exponentially, and Catalyst
@@ -350,25 +359,23 @@ object PageRank {
               ((lit(1.0 - damping) + lit(damping * danglingMass)) * col("reset")
                 + lit(damping) * coalesce(col("msg"), lit(0.0))).as("rank"))
         }
-      val toCut =
-        if (fuseDelta)
+      val withOld =
+        if (checkConvergence)
           newRanks.join(ranks.select(col("id"), col("rank").as("__old")), Seq("id"), "left")
         else newRanks
+      val observed = if (checkConvergence && store.nonEmpty) Some(Observation()) else None
+      val toCut = observed.fold(withOld)(o => withOld.observe(o, deltaOf.as("delta")).select("id", "rank"))
       val cut =
         if ((iter + 1) % cutEvery == 0 || iter + 1 == maxI)
           Iterate.cut(toCut, iter + 1, store, t0)
         else toCut
       msgsToFree.foreach(_.unpersist())
-      if (checkConvergence) {
-        delta =
-          if (fuseDelta)
-            cut.agg(max(abs(col("rank") - coalesce(col("__old"), col("rank")))))
-              .head.getDouble(0)
-          else
-            cut.join(ranks.withColumnRenamed("rank", "old"), Seq("id"))
-              .agg(max(abs(col("rank") - col("old")))).head.getDouble(0)
-      }
-      ranks = if (fuseDelta) cut.select("id", "rank") else cut
+      if (checkConvergence)
+        delta = observed match {
+          case Some(o) => o.get("delta").asInstanceOf[Double]
+          case None    => cut.agg(deltaOf).head.getDouble(0)
+        }
+      ranks = cut.select("id", "rank")
       iter += 1
       iterTimes += (System.currentTimeMillis() - t0) / 1000.0
     }

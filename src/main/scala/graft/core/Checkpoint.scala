@@ -1,7 +1,11 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession, SaveMode}
-import org.apache.spark.sql.functions._
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.types.StructType
 
 /** Versioned vertex-state checkpoint store for iterative algorithms.
   *
@@ -14,30 +18,55 @@ import org.apache.spark.sql.functions._
   * `writeTo(table).overwritePartitions()` with `iter` as partition column.
   *
   * Layout:
-  *   root/state/iter=K/        vertex state parquet for iteration K
-  *   root/metrics/             append-only (run_id, iter, partition, rows, ms)
+  *   root/state/iter=K/        vertex state parquet for iteration K; only a
+  *                             directory with a `_SUCCESS` marker is a
+  *                             resume candidate
+  *   root/metrics/iter-K-<uuid>.json
+  *                             one JSON-lines file per saved iteration, one
+  *                             line per written part file:
+  *                             (partition, rows, run_id, iter, ms), where
+  *                             `partition` is the part file's index and
+  *                             `rows` comes from its parquet footer
+  *
+  * A save starts no Spark job beyond the state write. The re-read
+  * carries the state's schema (no schema-inference job) and the metrics
+  * are footer reads plus one small file written through the Hadoop
+  * `FileSystem` on the driver (no shuffle, no parquet append). A metrics
+  * file is written under a `_tmp-` name and then renamed, so a crash
+  * mid-write leaves only a name that Spark's file listing skips.
   */
 final class CheckpointStore(val root: String, val runId: String) {
+  import CheckpointStore._
 
   private def stateDir(iter: Int) = s"$root/state/iter=$iter"
   private def metricsDir = s"$root/metrics"
 
-  /** Write state for iteration `iter`; returns the re-read DataFrame, which
-    * also truncates plan lineage (the driver-loop analog of Pregel
-    * superstep barriers).
+  /** Write state for iteration `iter` and its metrics file; returns the
+    * re-read DataFrame, which also truncates plan lineage (the driver-loop
+    * analog of Pregel superstep barriers).
     */
   def save(spark: SparkSession, iter: Int, state: DataFrame, startedAtMs: Long): DataFrame = {
     state.write.mode(SaveMode.Overwrite).parquet(stateDir(iter))
-    val reread = spark.read.parquet(stateDir(iter))
-    // per-partition lineage/metrics: rows per parquet file partition
-    val m = reread
-      .withColumn("partition", spark_partition_id())
-      .groupBy("partition").agg(count(lit(1)).as("rows"))
-      .withColumn("run_id", lit(runId))
-      .withColumn("iter", lit(iter))
-      .withColumn("ms", lit(System.currentTimeMillis() - startedAtMs))
-    m.write.mode(SaveMode.Append).parquet(metricsDir)
-    reread
+    val conf = spark.sparkContext.hadoopConfiguration
+    val out = new Path(root).getFileSystem(conf)
+    val files = out.listStatus(new Path(stateDir(iter))).map(_.getPath)
+      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+      .sortBy(_.getName)
+    val ms = System.currentTimeMillis() - startedAtMs
+    val lines = files.zipWithIndex.map { case (f, i) =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      val rows = try reader.getRecordCount finally reader.close()
+      new GenericRowWithSchema(Array[Any](i, rows, runId, iter, ms), MetricsSchema).json + "\n"
+    }
+    // no '=' in the temporary name: Spark's listing keeps `_`-prefixed
+    // names that contain one (partition directories)
+    val uuid = java.util.UUID.randomUUID()
+    val tmp = new Path(metricsDir, s"_tmp-$uuid.json")
+    val dst = new Path(metricsDir, s"iter-$iter-$uuid.json")
+    val w = out.create(tmp, false)
+    try w.write(lines.mkString.getBytes(java.nio.charset.StandardCharsets.UTF_8)) finally w.close()
+    if (!out.rename(tmp, dst)) throw new java.io.IOException(s"could not rename $tmp to $dst")
+    spark.read.schema(state.schema).parquet(stateDir(iter))
   }
 
   /** Latest checkpointed iteration, if any — the resume point. */
@@ -61,7 +90,14 @@ final class CheckpointStore(val root: String, val runId: String) {
   def load(spark: SparkSession, iter: Int): DataFrame =
     spark.read.parquet(stateDir(iter))
 
-  def metrics(spark: SparkSession): DataFrame = spark.read.parquet(metricsDir)
+  /** Every metrics line of every run written to this root. */
+  def metrics(spark: SparkSession): DataFrame =
+    spark.read.schema(MetricsSchema).json(metricsDir)
+}
+
+object CheckpointStore {
+  private val MetricsSchema: StructType =
+    StructType.fromDDL("partition INT, rows BIGINT, run_id STRING, iter INT, ms BIGINT")
 }
 
 /** In-memory lineage truncation for iterative loops.
@@ -80,22 +116,21 @@ object Lineage {
     // Dataset.localCheckpoint(eager=true) truncates BOTH the logical plan
     // (flat LogicalRDD — constant plan depth per superstep) and the RDD
     // lineage, exactly like the previous `df.rdd` + `createDataFrame` pair,
-    // but with two structural advantages (guide §1.4/§2.4):
-    //  - it checkpoints the INTERNAL UnsafeRow RDD, so no per-superstep
-    //    InternalRow -> external Row -> InternalRow codec round-trip
-    //    (DeserializeToObject/SerializeFromObject pairs disappear from every
-    //    iterative plan);
-    //  - the LogicalRDD keeps the physical plan's output partitioning and
-    //    ordering, so a loop whose state is already hash-partitioned on the
-    //    next join key (ranks on id, membership on nbr, frontier on src)
-    //    re-enters the superstep join with NO new Exchange.
+    // and it checkpoints the INTERNAL UnsafeRow RDD, so there is no
+    // per-superstep InternalRow -> external Row -> InternalRow codec
+    // round-trip (DeserializeToObject/SerializeFromObject pairs disappear
+    // from every iterative plan; guide §1.4/§2.4).
     // The raw checkpoint must NOT be returned as-is: since SPARK-39748 its
     // LogicalRDD carries the origin plan's statistics, and chained across
     // supersteps those estimates compound multiplicatively until Catalyst
     // spends minutes on million-digit BigInt products (the failure mode
     // this object's docstring documents — it bit again the first time cut
     // used localCheckpoint directly). dropOriginStats rebuilds the
-    // LogicalRDD with fresh leaf stats, keeping the rows + partitioning.
+    // LogicalRDD with fresh leaf stats and deliberately DROPS the output
+    // partitioning and ordering too (see GraftLogicalRdd: a preserved
+    // partitioning cost seconds of driver CPU per plan in alias-mapped
+    // partitioning expansion), so the next superstep's join may add an
+    // Exchange on the small state side; only the rows are kept.
     org.apache.spark.sql.execution.GraftLogicalRdd.dropOriginStats(
       df.localCheckpoint(true))
 

@@ -24,7 +24,8 @@ import org.apache.spark.sql.classic.Dataset
   * `originStats = None` (and no inherited constraints): planning falls back
   * to the flat leaf default estimate — O(1) digits per superstep, like the
   * pre-checkpoint `createDataFrame(rdd, schema)` cut — while the
-  * checkpointed internal rows, output partitioning and ordering are kept.
+  * checkpointed internal rows are kept. The output partitioning and
+  * ordering are dropped as well (reason below).
   */
 object GraftLogicalRdd {
   def dropOriginStats(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {

@@ -1,8 +1,8 @@
 package graft
 
 import graft.algos.PageRank
-import graft.core.LinkGraph
-import org.apache.spark.sql.functions.{col, lit, when}
+import graft.core.{CheckpointStore, LinkGraph}
+import org.apache.spark.sql.functions.{col, lit, sum, when}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Goldens from /root/reference/tests/test_structural.py:389-404. */
@@ -121,5 +121,57 @@ class PageRankSpec extends AnyFunSuite {
     // lineage/metrics rows exist for every checkpointed iteration
     val iters = store1.metrics(spark).select("iter").distinct().count()
     assert(iters >= 5)
+  }
+
+  // a cycle with a tail and a dangling page (6): the web-graph shape
+  private def danglingGraph = LinkGraph(spark, 7,
+    Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 0L), (2L, 4L), (4L, 5L), (5L, 2L), (1L, 6L)), directed = true)
+
+  test("durable tolerance mode: observed delta, same iterations and ranks as in memory, metrics per iteration") {
+    val g = danglingGraph
+    val mem = PageRank.run(g, tol = 1e-10, maxIter = 300)
+    val store = new CheckpointStore(java.nio.file.Files.createTempDirectory("graft-ckpt-tol").toString, "tol")
+    val dur = PageRank.run(g, tol = 1e-10, maxIter = 300, store = Some(store))
+    assert(dur.iterations == mem.iterations)
+    assert(dur.delta < 1e-10, s"delta ${dur.delta}")
+    val vMem = TestSession.vector(mem.ranks, "rank")
+    val vDur = TestSession.vector(dur.ranks, "rank")
+    assert(vMem.indices.map(i => math.abs(vMem(i) - vDur(i))).max < 1e-9)
+    assert(dur.ranks.columns.toSeq == Seq("id", "rank"))
+    val rows = store.metrics(spark).groupBy("iter").agg(sum("rows")).collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    assert(rows == (1 to dur.iterations).map(_ -> 7L).toMap)
+  }
+
+  test("durable tolerance superstep job floor: dangling and dangling-free graphs") {
+    val cycle = LinkGraph(spark, 5,
+      Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L), (4L, 0L), (0L, 2L)), directed = true)
+    // tol 0 never stops early, so two runs differ only in supersteps;
+    // returns (jobs, SQL executions) per superstep
+    def perStep(g: LinkGraph): (Double, Double) = {
+      def run(iters: Int): (Int, Int) = {
+        val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-floor").toString
+        val (r, ids) = JobCounter(spark)(
+          PageRank.run(g, tol = 0.0, maxIter = iters, store = Some(new CheckpointStore(dir, "floor"))))
+        assert(r.iterations == iters)
+        (ids.size, ids.distinct.size)
+      }
+      val ((j2, e2), (j6, e6)) = (run(2), run(6))
+      ((j6 - j2) / 4.0, (e6 - e2) / 4.0)
+    }
+    val (dJobs, dExecs) = perStep(danglingGraph)
+    val (fJobs, fExecs) = perStep(cycle)
+    info(s"per superstep: $dJobs jobs in $dExecs executions with dangling pages, $fJobs in $fExecs without")
+    // measured at local[4] with AQE (each shuffle stage and broadcast is its
+    // own job). Without dangling pages the superstep is the snapshot write
+    // alone; with them, the message cache and the mass sum run before it.
+    assert(fExecs == 1.0 && fJobs <= 4.0)
+    assert(dExecs <= 3.0 && dJobs <= 10.0)
+  }
+
+  test("fixed-iter driver kernel: an out-of-range endpoint fails naming the id and n") {
+    val g = LinkGraph(Seq((0L, 1L), (1L, 5L)).toDF("src", "dst"), directed = true, Some(3L))
+    val e = intercept[IllegalArgumentException](PageRank.run(g, fixedIters = Some(3)))
+    assert(e.getMessage.contains("endpoint 5") && e.getMessage.contains("n = 3"), e.getMessage)
   }
 }
