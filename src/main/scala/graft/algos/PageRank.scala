@@ -48,8 +48,10 @@ object PageRank {
   case object EdgeJoin extends Strategy
   final case class CsrBlocks(partitions: Int = 64) extends Strategy
   final case class HubBroadcast(k: Int = 10000) extends Strategy
-  /** Grid-partitioned CSR SpMV ([[PageRankGrid]]): dense ids required,
-    * 8 bytes/edge, one two-stage RDD job per superstep. `p = 0` auto-sizes.
+  /** Grid-partitioned CSR SpMV ([[PageRankGrid]]): dense ids required (an
+    * edge outside `[0, n)` fails the build), 8 bytes/edge, a build that reads
+    * the edge table once, and one two-stage RDD job per superstep in every
+    * mode, the convergence delta included. `p = 0` auto-sizes.
     */
   final case class GridBlocks(p: Int = 0) extends Strategy
 

@@ -44,16 +44,27 @@ import org.apache.spark.storage.StorageLevel
   *   2. Reduce stage (P tasks): block-aligned `reduceByKey` sums the ≤P
   *      partial arrays per destination block (communication O(n·P) doubles,
   *      the 1D-partitioned SpMV bound; a √P×√P task grid drops it to
-  *      O(n·√P) when P must grow — documented, not needed at sandbox scale)
-  *      and applies `pre' = (1-d)*reset + d*msg`.
+  *      O(n·√P) when P must grow — documented, not needed at sandbox scale),
+  *      applies `pre' = (1-d)*reset + d*msg`, and zips the old state to
+  *      compute the block's share of `H'` and its largest rank change
+  *      (below). The job's one action returns `(H', maxDelta)`.
   *
-  * Dangling-mass trick: a dangling vertex contributes no messages, so with
-  * Σrank = 1 maintained, `danglingMass = 1 - Σmsg` and the true rank is
+  * Dangling-mass trick: a dangling vertex contributes no messages, so the
+  * true rank is
   *   `rank[i] = pre[i] + c * reset[i]`  with  `c = 1 - Σpre`
   * — the correction is a DRIVER SCALAR folded into the next iteration's
-  * `rScaled`, never materialized into the vectors. The per-superstep scalar
-  * (Σpre) rides the same action that materializes the persisted state, so
-  * dangling graphs cost no extra job either.
+  * `rScaled`, never materialized into the vectors. The scalar is predicted
+  * before the superstep runs rather than summed after it: row-normalized,
+  * every non-dangling vertex sends exactly its rank, so with the static
+  * sums `R = Σreset` and `RH = Σ_{non-dangling} reset`, and
+  * `H = Σ_{non-dangling} pre`,
+  *   `c' = max(0, 1 - ((1-d)*R + d*(H + c*RH)))`
+  * which is `1 - Σpre'` in real arithmetic (it differs by rounding only).
+  * Knowing `c'` up front lets the reduce stage compute the convergence
+  * delta in the task that writes `pre'`, so tolerance mode, dangling
+  * graphs and fixed-iteration mode alike cost one job per superstep. A
+  * fresh uniform run takes `R`, `RH` and `H` from the build; a personalized
+  * or resumed run computes them in one job before the first superstep.
   *
   * At 10^12 vertices the same layout shards `stride ≤ 2^24` blocks across
   * executors; block-local arrays stay ≤128 MiB and the packed-key space
@@ -111,27 +122,32 @@ object PageRankGrid {
 
   /** One source block's cells: `keys` sorted by (dstBlock, dstLocal),
     * `offsets(db)..offsets(db+1)` delimiting destination block `db`,
-    * `ws` parallel edge weights or null for the unweighted fast path.
+    * `ws` parallel edge weights or null for the unweighted fast path, and
+    * `invW` the inverse out-strength of each source slot (0.0 = dangling).
     */
-  final case class CellsBlock(sb: Int, offsets: Array[Int], keys: Array[Long], ws: Array[Double])
+  final case class CellsBlock(sb: Int, offsets: Array[Int], keys: Array[Long], ws: Array[Double],
+      invW: Array[Double])
 
-  /** Static grid: edge cells + per-source-block inverse out-strength, both
-    * partitioned by the SAME HashPartitioner so every superstep zips
-    * partitions without shuffling static data.
+  /** Static grid: one cells block per source block, partitioned so that
+    * block `b` is partition `b` and every superstep zips partitions without
+    * shuffling static data. `nonDangling` counts the vertices with out-edges.
     */
   final class Grid(
       val n: Long,
       val p: Int,
       val stride: Int,
       val cells: RDD[CellsBlock],
-      val invW: RDD[Array[Double]],
+      val nonDangling: Long,
       val partitioner: HashPartitioner) {
 
-    def lenOf(b: Int): Int =
-      math.min(stride.toLong, n - b.toLong * stride).max(0L).toInt
-
-    def unpersist(): Unit = { cells.unpersist(false); invW.unpersist(false); () }
+    def unpersist(): Unit = { cells.unpersist(false); () }
   }
+
+  /** Block `b` of the rank state: `pre`, the ranks without the dangling
+    * correction, and, once a superstep has written it, the block's share of
+    * `H = Σ_{non-dangling} pre` and its largest rank change.
+    */
+  private final case class RankBlock(b: Int, pre: Array[Double], h: Double, delta: Double)
 
   /** Pick a block count: at least the default parallelism (task granularity)
     * and large enough that a block's local ids fit 24 bits.
@@ -141,8 +157,18 @@ object PageRankGrid {
     math.max(math.max(spark.sparkContext.defaultParallelism, 8), minForBits)
   }
 
-  /** Build the static grid from an out-edge view (src, dst, weight).
-    * One shuffle of the edge table, then per-partition pack + sort.
+  private def blockLen(n: Long, stride: Int, b: Int): Int =
+    math.min(stride.toLong, n - b.toLong * stride).max(0L).toInt
+
+  /** Build the static grid from an out-edge view (src, dst, weight) in one
+    * pass: each edge is range-checked and packed map-side, one shuffle
+    * groups the keys by source block, then each block is sorted and indexed
+    * and its inverse out-strength summed from its own cells. The one action
+    * also counts the non-dangling vertices.
+    *
+    * Every id must lie in `[0, n)`: out-of-range edges are counted and
+    * dropped map-side, and the build fails after its action if there were
+    * any, naming `n` and one such edge.
     *
     * `unweighted = true` (statically known, e.g. the edge table has no
     * weight column) ships BARE packed keys through the shuffle — the
@@ -156,15 +182,28 @@ object PageRankGrid {
     require(p <= (1 << 16), s"grid block count $p exceeds 16-bit packed range")
     val stride = (((n max 1L) + p - 1) / p).toInt
     val part = new HashPartitioner(p)
+    val sc = spark.sparkContext
+    val bad = sc.longAccumulator("GridBlocks out-of-range edges")
+    val badEdge = sc.collectionAccumulator[(Long, Long)]("GridBlocks out-of-range edge")
+    // a per-task filter: counts and drops edges outside [0, n), keeping the
+    // task's first one as the example for the error message
+    def inRange(): (Long, Long) => Boolean = {
+      var first = true
+      (s, t) => {
+        val ok = s >= 0 && s < n && t >= 0 && t < n
+        if (!ok) { bad.add(1); if (first) { badEdge.add((s, t)); first = false } }
+        ok
+      }
+    }
+    def key(s: Long, t: Long): Long = ((t / stride) << 48) | ((t % stride) << 24) | (s % stride)
     import spark.implicits._
 
-    // (sb, packedKey[, w]): integral DIV/% keep Long precision (no doubles)
-    val sbCol = expr(s"CAST(src DIV $stride AS INT)").as("sb")
-    val keyCol = expr(
-      s"shiftleft(dst DIV $stride, 48) + shiftleft(dst % $stride, 24) + (src % $stride)").as("key")
-
     val cells = (if (unweighted) {
-      edges.select(sbCol, keyCol).as[(Int, Long)].rdd
+      edges.select(col("src"), col("dst")).as[(Long, Long)].rdd
+        .mapPartitions { it =>
+          val ok = inRange()
+          it.collect { case (s, t) if ok(s, t) => ((s / stride).toInt, key(s, t)) }
+        }
         .partitionBy(part)
         .mapPartitionsWithIndex({ (sb, it) =>
           var keys = new Array[Long](1024)
@@ -174,12 +213,15 @@ object PageRankGrid {
             if (m == keys.length) keys = java.util.Arrays.copyOf(keys, m * 2)
             keys(m) = k; m += 1
           }
-          Iterator.single(finishCells(p, sb, keys, null, m, allOne = true))
+          Iterator.single(finishCells(p, sb, blockLen(n, stride, sb), keys, null, m, allOne = true))
         }, preservesPartitioning = true)
     } else {
-      edges.select(sbCol, keyCol, coalesce(col("weight"), lit(1.0)).as("w"))
-        .as[(Int, Long, Double)].rdd
-        .map(t => (t._1, (t._2, t._3)))
+      edges.select(col("src"), col("dst"), coalesce(col("weight"), lit(1.0)))
+        .as[(Long, Long, Double)].rdd
+        .mapPartitions { it =>
+          val ok = inRange()
+          it.collect { case (s, t, w) if ok(s, t) => ((s / stride).toInt, (key(s, t), w)) }
+        }
         .partitionBy(part)
         .mapPartitionsWithIndex({ (sb, it) =>
           var keys = new Array[Long](1024)
@@ -196,46 +238,43 @@ object PageRankGrid {
             if (w != 1.0) allOne = false
             m += 1
           }
-          Iterator.single(finishCells(p, sb, keys, ws, m, allOne))
+          Iterator.single(finishCells(p, sb, blockLen(n, stride, sb), keys, ws, m, allOne))
         }, preservesPartitioning = true)
     }).persist(StorageLevel.MEMORY_AND_DISK)
 
-    // inverse out-strength per source block (0.0 = dangling)
-    val invW = edges
-      .groupBy(col("src")).agg(sum(coalesce(col("weight"), lit(1.0))).as("outw"))
-      .select(
-        expr(s"CAST(src DIV $stride AS INT)").as("sb"),
-        expr(s"CAST(src % $stride AS INT)").as("sl"),
-        (lit(1.0) / col("outw")).as("iw"))
-      .as[(Int, Int, Double)].rdd
-      .map(t => (t._1, (t._2, t._3)))
-      .partitionBy(part)
-      .mapPartitionsWithIndex({ (sb, it) =>
-        val len = math.min(stride.toLong, (n - sb.toLong * stride).max(0L)).toInt
-        val arr = new Array[Double](len)
-        while (it.hasNext) { val (_, (sl, iw)) = it.next(); arr(sl) = iw }
-        Iterator.single(arr)
-      }, preservesPartitioning = true)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    cells.count(); invW.count()
-    new Grid(n, p, stride, cells, invW, part)
+    val nonDangling = cells.map(_.invW.count(_ != 0.0).toLong).fold(0L)(_ + _)
+    val nBad = bad.value
+    if (nBad > 0) cells.unpersist(false)
+    require(nBad == 0, {
+      val (s, t) = badEdge.value.get(0)
+      s"GridBlocks needs dense ids in [0, $n); use graft.core.Ids.assignDense first " +
+        s"(out-of-range edges: $nBad, e.g. $s -> $t)"
+    })
+    new Grid(n, p, stride, cells, nonDangling, part)
   }
 
-  /** Trim, sort and index one source block's packed cells (executor-side;
-    * only primitives/arrays cross the closure boundary).
+  /** Trim, sort and index one source block's packed cells, and invert each
+    * source slot's out-strength (executor-side; only primitives/arrays cross
+    * the closure boundary).
     */
-  private def finishCells(p: Int, sb: Int, keys0: Array[Long], ws0: Array[Double],
+  private def finishCells(p: Int, sb: Int, len: Int, keys0: Array[Long], ws0: Array[Double],
                           m: Int, allOne: Boolean): CellsBlock = {
     val keys = java.util.Arrays.copyOf(keys0, m)
     val ws = if (allOne || ws0 == null) null else java.util.Arrays.copyOf(ws0, m)
     if (ws == null) java.util.Arrays.sort(keys) else sortPair(keys, ws, 0, m - 1)
     val offsets = new Array[Int](p + 1)
+    val invW = new Array[Double](len)
     var i = 0
-    while (i < m) { offsets(((keys(i) >>> 48) & 0xFFFF).toInt + 1) += 1; i += 1 }
+    while (i < m) {
+      offsets(((keys(i) >>> 48) & 0xFFFF).toInt + 1) += 1
+      invW((keys(i) & Mask24).toInt) += (if (ws == null) 1.0 else ws(i))
+      i += 1
+    }
     i = 0
     while (i < p) { offsets(i + 1) += offsets(i); i += 1 }
-    CellsBlock(sb, offsets, keys, ws)
+    i = 0
+    while (i < len) { if (invW(i) != 0.0) invW(i) = 1.0 / invW(i); i += 1 }
+    CellsBlock(sb, offsets, keys, ws, invW)
   }
 
   /** Dual-array quicksort: sort `keys[lo..hi]` carrying `vals` along. */
@@ -274,14 +313,6 @@ object PageRankGrid {
     val spark = g.spark
     val n = g.vcount()
     require(n > 0, "empty graph")
-    // dense-id contract (cheap one-time scan of the edge table)
-    g.edges.agg(max(greatest(col("src"), col("dst"))), min(least(col("src"), col("dst"))))
-      .head match {
-        case r if r.isNullAt(0) => // edgeless graph: any n works
-        case r =>
-          require(r.getLong(0) < n && r.getLong(1) >= 0,
-            s"GridBlocks needs dense ids in [0, $n); use graft.core.Ids.assignDense first")
-      }
     val p = if (p0 > 0) p0 else autoP(spark, n)
     // no weight column on the base table => outView's weight is the literal
     // 1.0 the view adds; ship bare packed keys through the build shuffle
@@ -302,66 +333,71 @@ object PageRankGrid {
       store: Option[CheckpointStore],
       initial: Option[DataFrame],
       startIter: Int): PageRank.Result = {
-    val sc = spark.sparkContext
     val n = grid.n
     val p = grid.p
     val stride = grid.stride
-    val part = grid.partitioner
     val d = damping
-
-    // reset chunks: null array = uniform 1/n (never materialized)
     val uniform = 1.0 / n
-    val resetChunks: RDD[Array[Double]] = (reset match {
-      case None =>
-        sc.parallelize(0 until p, p).map(b => (b, b)).partitionBy(part)
-          .mapPartitions(_ => Iterator.single(null: Array[Double]), preservesPartitioning = true)
-      case Some(r) =>
-        import spark.implicits._
-        val tot = r.agg(sum("reset")).head.getDouble(0)
-        require(tot > 0.0, "reset vector must not be all zeros")
-        val keyed = r.select(
-            expr(s"CAST(id DIV $stride AS INT)").as("b"),
-            expr(s"CAST(id % $stride AS INT)").as("l"),
-            (col("reset") / tot).as("v"))
-          .as[(Int, Int, Double)].rdd
-          .map(t => (t._1, (t._2, t._3)))
-          .partitionBy(part)
-        keyed.mapPartitionsWithIndex({ (b, it) =>
-          val arr = new Array[Double](math.min(stride.toLong, (n - b.toLong * stride).max(0L)).toInt)
-          while (it.hasNext) { val (_, (l, v)) = it.next(); arr(l) = v }
-          Iterator.single(arr)
-        }, preservesPartitioning = true)
-    }).persist(StorageLevel.MEMORY_AND_DISK)
-    resetChunks.count()
 
-    def chunked(df: DataFrame): RDD[(Int, Array[Double])] = {
+    // (id, v) rows -> one dense array per block, block b in partition b
+    def chunked(df: DataFrame): RDD[Array[Double]] = {
       import spark.implicits._
       df.select(
           expr(s"CAST(id DIV $stride AS INT)").as("b"),
           expr(s"CAST(id % $stride AS INT)").as("l"),
-          col("rank").cast("double").as("v"))
+          col("v").cast("double"))
         .as[(Int, Int, Double)].rdd
         .map(t => (t._1, (t._2, t._3)))
-        .partitionBy(part)
+        .partitionBy(grid.partitioner)
         .mapPartitionsWithIndex({ (b, it) =>
-          val arr = new Array[Double](math.min(stride.toLong, (n - b.toLong * stride).max(0L)).toInt)
+          val arr = new Array[Double](blockLen(n, stride, b))
           while (it.hasNext) { val (_, (l, v)) = it.next(); arr(l) = v }
-          Iterator.single((b, arr))
+          Iterator.single(arr)
         }, preservesPartitioning = true)
     }
 
-    var state: RDD[(Int, Array[Double])] = (initial match {
-      case Some(df) => chunked(df)
-      case None =>
-        resetChunks.mapPartitionsWithIndex({ (b, it) =>
-          it.next() // align
-          val len = math.min(stride.toLong, (n - b.toLong * stride).max(0L)).toInt
-          Iterator.single((b, Array.fill(len)(uniform)))
-        }, preservesPartitioning = true)
-    }).persist(StorageLevel.MEMORY_AND_DISK)
-    state.count()
-    var c = 0.0
+    // reset chunks: null array = uniform 1/n (never materialized). Reset ids
+    // outside [0, n) count toward the normalizer only, as in PageRank.
+    val resetChunks: RDD[Array[Double]] = reset match {
+      case None => grid.cells.map(_ => null: Array[Double])
+      case Some(r) =>
+        val tot = r.agg(sum("reset")).head.getDouble(0)
+        require(tot > 0.0, "reset vector must not be all zeros")
+        chunked(r.where(col("id") >= 0 && col("id") < n).select(col("id"), (col("reset") / tot).as("v")))
+          .persist(StorageLevel.MEMORY_AND_DISK)
+    }
 
+    var state: RDD[RankBlock] = initial match {
+      case Some(df) =>
+        chunked(df.select(col("id"), col("rank").as("v")))
+          .mapPartitionsWithIndex((b, it) => Iterator.single(RankBlock(b, it.next(), 0.0, 0.0)))
+          .persist(StorageLevel.MEMORY_AND_DISK)
+      case None =>
+        grid.cells.map(cb => RankBlock(cb.sb, Array.fill(cb.invW.length)(uniform), 0.0, 0.0))
+    }
+
+    // R = Σreset, RH = Σ_{non-dangling} reset, H = Σ_{non-dangling} pre: a
+    // fresh uniform run knows all three from the build, otherwise one job
+    val nd = grid.nonDangling * uniform
+    val (rSum, rhSum, h0) =
+      if (reset.isEmpty && initial.isEmpty) (1.0, nd, nd)
+      else grid.cells.zipPartitions(resetChunks, state) { (cit, rit, sit) =>
+        val iw = cit.next().invW
+        val ra = rit.next()
+        val pre = sit.next().pre
+        var r = 0.0; var rh = 0.0; var h = 0.0
+        var i = 0
+        while (i < iw.length) {
+          val v = if (ra == null) uniform else ra(i)
+          r += v
+          if (iw(i) != 0.0) { rh += v; h += pre(i) }
+          i += 1
+        }
+        Iterator.single((r, rh, h))
+      }.reduce((a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3))
+
+    var c = 0.0
+    var h = h0
     var iter = startIter
     var delta = Double.MaxValue
     val maxI = fixedIters.map(_ + startIter).getOrElse(maxIter)
@@ -371,74 +407,78 @@ object PageRankGrid {
     while (iter < maxI && delta > tol) {
       val t0 = System.currentTimeMillis()
       val cc = c
+      // the dangling scalar of the state this superstep writes, known before
+      // it runs (see "Dangling-mass trick")
+      val cNew = math.max(0.0, 1.0 - ((1.0 - d) * rSum + d * (h + cc * rhSum)))
+      val old = state
 
       // stage 1: per-source-block SpMV into per-destination-block partials
       val msgs: RDD[(Int, Partial)] =
-        grid.cells.zipPartitions(grid.invW, resetChunks, state) { (cit, wit, rit, sit) =>
-          if (cit.isEmpty || sit.isEmpty) Iterator.empty
-          else {
-            val cb = cit.next()
-            val iw = wit.next()
-            val ra = rit.next()
-            val (_, pre) = sit.next()
-            val len = pre.length
-            val rScaled = new Array[Double](len)
-            var i = 0
-            if (ra == null) while (i < len) { rScaled(i) = (pre(i) + cc * uniform) * iw(i); i += 1 }
-            else while (i < len) { rScaled(i) = (pre(i) + cc * ra(i)) * iw(i); i += 1 }
-            val keys = cb.keys
-            val ws = cb.ws
-            val off = cb.offsets
-            val acc = new Array[Double](stride) // reused across cells
-            (0 until p).iterator.filter(db => off(db + 1) > off(db)).map { db =>
-              val accLen = math.min(stride.toLong, (n - db.toLong * stride).max(0L)).toInt
-              var nnz = 0
-              var k = off(db)
-              val end = off(db + 1)
-              if (ws == null)
-                while (k < end) {
-                  val key = keys(k); val t = ((key >>> 24) & Mask24).toInt
-                  if (acc(t) == 0.0) nnz += 1
-                  acc(t) += rScaled((key & Mask24).toInt); k += 1
+        grid.cells.zipPartitions(resetChunks, old) { (cit, rit, sit) =>
+          val cb = cit.next()
+          val ra = rit.next()
+          val pre = sit.next().pre
+          val iw = cb.invW
+          val len = pre.length
+          val rScaled = new Array[Double](len)
+          var i = 0
+          if (ra == null) while (i < len) { rScaled(i) = (pre(i) + cc * uniform) * iw(i); i += 1 }
+          else while (i < len) { rScaled(i) = (pre(i) + cc * ra(i)) * iw(i); i += 1 }
+          val keys = cb.keys
+          val ws = cb.ws
+          val off = cb.offsets
+          val acc = new Array[Double](stride) // reused across cells
+          (0 until p).iterator.filter(db => off(db + 1) > off(db)).map { db =>
+            val accLen = blockLen(n, stride, db)
+            var nnz = 0
+            var k = off(db)
+            val end = off(db + 1)
+            if (ws == null)
+              while (k < end) {
+                val key = keys(k); val t = ((key >>> 24) & Mask24).toInt
+                if (acc(t) == 0.0) nnz += 1
+                acc(t) += rScaled((key & Mask24).toInt); k += 1
+              }
+            else
+              while (k < end) {
+                val key = keys(k); val t = ((key >>> 24) & Mask24).toInt
+                if (acc(t) == 0.0) nnz += 1
+                acc(t) += ws(k) * rScaled((key & Mask24).toInt); k += 1
+              }
+            val partial =
+              if (nnz.toLong * 3 < accLen.toLong * 2) {
+                // sparse: extract touched slots (re-walking the edge range
+                // would revisit duplicates; scan only when it wins)
+                val si = new Array[Int](nnz)
+                val sv = new Array[Double](nnz)
+                var j = 0; var w = 0
+                while (j < accLen && w < nnz) {
+                  val v = acc(j)
+                  if (v != 0.0) { si(w) = j; sv(w) = v; acc(j) = 0.0; w += 1 }
+                  j += 1
                 }
-              else
-                while (k < end) {
-                  val key = keys(k); val t = ((key >>> 24) & Mask24).toInt
-                  if (acc(t) == 0.0) nnz += 1
-                  acc(t) += ws(k) * rScaled((key & Mask24).toInt); k += 1
-                }
-              val partial =
-                if (nnz.toLong * 3 < accLen.toLong * 2) {
-                  // sparse: extract touched slots (re-walking the edge range
-                  // would revisit duplicates; scan only when it wins)
-                  val si = new Array[Int](nnz)
-                  val sv = new Array[Double](nnz)
-                  var j = 0; var w = 0
-                  while (j < accLen && w < nnz) {
-                    val v = acc(j)
-                    if (v != 0.0) { si(w) = j; sv(w) = v; acc(j) = 0.0; w += 1 }
-                    j += 1
-                  }
-                  new Partial(accLen, null,
-                    if (w == nnz) si else java.util.Arrays.copyOf(si, w),
-                    if (w == nnz) sv else java.util.Arrays.copyOf(sv, w))
-                } else {
-                  val dense = java.util.Arrays.copyOf(acc, accLen)
-                  java.util.Arrays.fill(acc, 0, accLen, 0.0)
-                  new Partial(accLen, dense, null, null)
-                }
-              (db, partial)
-            }
+                new Partial(accLen, null,
+                  if (w == nnz) si else java.util.Arrays.copyOf(si, w),
+                  if (w == nnz) sv else java.util.Arrays.copyOf(sv, w))
+              } else {
+                val dense = java.util.Arrays.copyOf(acc, accLen)
+                java.util.Arrays.fill(acc, 0, accLen, 0.0)
+                new Partial(accLen, dense, null, null)
+              }
+            (db, partial)
           }
         }
 
-      // stage 2: block-aligned partial-sum reduce + rank update
-      val reduced = msgs.reduceByKey(part, (a: Partial, b: Partial) => a.merge(b))
-      val newFull: RDD[(Int, (Array[Double], Double))] =
-        resetChunks.zipPartitions(reduced, preservesPartitioning = true) { (rit, mit) =>
+      // stage 2: block-aligned partial-sum reduce + rank update, with the
+      // block's share of H' and its largest rank change from the old state
+      val reduced = msgs.reduceByKey(grid.partitioner, (a: Partial, b: Partial) => a.merge(b))
+      val next: RDD[RankBlock] =
+        grid.cells.zipPartitions(resetChunks, old, reduced) { (cit, rit, sit, mit) =>
+          val cb = cit.next()
           val ra = rit.next()
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          val len = math.min(stride.toLong, (n - pid.toLong * stride).max(0L)).toInt
+          val prev = sit.next().pre
+          val iw = cb.invW
+          val len = iw.length
           val out = new Array[Double](len)
           var i = 0
           if (ra == null) { val v = (1.0 - d) * uniform; while (i < len) { out(i) = v; i += 1 } }
@@ -452,47 +492,42 @@ object PageRankGrid {
               while (i < partial.idx.length) { out(partial.idx(i)) += d * partial.vals(i); i += 1 }
             }
           }
-          var s = 0.0
-          i = 0; while (i < len) { s += out(i); i += 1 }
-          Iterator.single((pid, (out, s)))
-        }
-      newFull.persist(StorageLevel.MEMORY_AND_DISK)
-      newFull.localCheckpoint()
-      val sumPre = newFull.map(_._2._2).sum() // materializing action
-      val cNew = math.max(0.0, 1.0 - sumPre)
-
-      if (checkConvergence) {
-        val old = state
-        val oc = c
-        delta = resetChunks.zipPartitions(newFull, old) { (rit, nit, oit) =>
-          val ra = rit.next()
-          if (nit.isEmpty || oit.isEmpty) Iterator.single(0.0)
-          else {
-            val nw = nit.next()._2._1
-            val ov = oit.next()._2
-            var m = 0.0
-            var i = 0
-            if (ra == null) while (i < nw.length) { val dd = math.abs(nw(i) + cNew * uniform - ov(i) - oc * uniform); if (dd > m) m = dd; i += 1 }
-            else while (i < nw.length) { val dd = math.abs(nw(i) + cNew * ra(i) - ov(i) - oc * ra(i)); if (dd > m) m = dd; i += 1 }
-            Iterator.single(m)
+          val dc = cNew - cc
+          var hb = 0.0
+          var m = 0.0
+          i = 0
+          while (i < len) {
+            if (iw(i) != 0.0) hb += out(i)
+            val dd = math.abs(out(i) - prev(i) + dc * (if (ra == null) uniform else ra(i)))
+            if (dd > m) m = dd
+            i += 1
           }
-        }.max()
-      }
+          Iterator.single(RankBlock(cb.sb, out, hb, m))
+        }
+      next.persist(StorageLevel.MEMORY_AND_DISK)
+      next.localCheckpoint()
+      // the superstep's one action: it materializes `next`
+      val (hNew, dMax) = next.map(b => (b.h, b.delta))
+        .reduce((a, b) => (a._1 + b._1, math.max(a._2, b._2)))
+      if (checkConvergence) delta = dMax
 
-      val newState = newFull.mapValues(_._1)
       store.foreach { s =>
-        s.save(spark, iter + 1, ranksDF(spark, newState, resetChunks, cNew, uniform, stride), t0); ()
+        s.save(spark, iter + 1, ranksDF(spark, next, resetChunks, cNew, uniform, stride), t0); ()
       }
-      state.unpersist(false)
-      state = newState
+      // `next` is materialized and cut from its lineage: the old state can go
+      old.unpersist(false)
+      state = next
       c = cNew
+      h = hNew
       iter += 1
       iterTimes += (System.currentTimeMillis() - t0) / 1000.0
     }
 
     val out = ranksDF(spark, state, resetChunks, c, uniform, stride)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
+    // fill the cache with one scan job (a count would add an aggregate
+    // exchange, run as further jobs under AQE)
+    out.foreachPartition((it: Iterator[Row]) => it.foreach(_ => ()))
     state.unpersist(false)
     resetChunks.unpersist(false)
     PageRank.Result(out, iter, delta, iterTimes.toSeq)
@@ -503,20 +538,17 @@ object PageRankGrid {
     */
   private def ranksDF(
       spark: SparkSession,
-      state: RDD[(Int, Array[Double])],
+      state: RDD[RankBlock],
       resetChunks: RDD[Array[Double]],
       c: Double,
       uniform: Double,
       stride: Int): DataFrame = {
     val rows = state.zipPartitions(resetChunks) { (sit, rit) =>
-      if (sit.isEmpty) Iterator.empty
-      else {
-        val (b, arr) = sit.next()
-        val ra = rit.next()
-        val base = b.toLong * stride
-        arr.iterator.zipWithIndex.map { case (v, i) =>
-          Row(base + i, v + c * (if (ra == null) uniform else ra(i)))
-        }
+      val blk = sit.next()
+      val ra = rit.next()
+      val base = blk.b.toLong * stride
+      blk.pre.iterator.zipWithIndex.map { case (v, i) =>
+        Row(base + i, v + c * (if (ra == null) uniform else ra(i)))
       }
     }
     spark.createDataFrame(rows,

@@ -181,9 +181,9 @@ object WebOps {
     *     re-sorted and sliced to the global top-N; `posexplode` of the
     *     final sorted slice yields rk = position + 1 directly.
     * Result is row-for-row identical to the window form: the order
-    * (orderCol DESC NULLS LAST, id ASC) is total because ids are unique,
-    * and every global top-N row is necessarily in its partition's local
-    * top-N.
+    * (orderCol DESC NULLS LAST, id ASC, with NaN greater than any number)
+    * is total because ids are unique, and every global top-N row is
+    * necessarily in its partition's local top-N.
     */
   def capPerDomain(pages: DataFrame, maxPerDomain: Int, orderCol: String,
                    urlCol: String = "url", idCol: String = "doc_id"): DataFrame = {
@@ -194,6 +194,8 @@ object WebOps {
     // full output row rides along as a nested struct payload
     val rec = struct(col(orderCol).as("_o"), col(idCol).as("_i"),
       struct(outCols.map(col): _*).as("_r"))
+    // Spark's `>` and `<` order NaN above every number, as its sort does,
+    // so NaN needs no branch of its own
     def cmp(l: Column, r: Column): Column =
       when(l.getField("_o").isNull && r.getField("_o").isNotNull, 1)
         .when(l.getField("_o").isNotNull && r.getField("_o").isNull, -1)

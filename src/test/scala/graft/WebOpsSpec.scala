@@ -1,6 +1,7 @@
 package graft
 
 import graft.text.{TextOps, WebOps}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -172,6 +173,30 @@ class WebOpsSpec extends AnyFunSuite {
       .select("doc_id", "host", "rk").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq.sorted
     assert(got == want)
+  }
+
+  test("capPerDomain: NaN and null order values sort as in the row_number window") {
+    // NaN sorts greatest (first under DESC), null last; ties, NaN pairs and
+    // null pairs fall to the ascending-id tiebreak
+    val pages = spark.range(120).repartition(5)
+      .select(col("id").as("doc_id"),
+        concat(lit("https://h"), col("id") % 4, lit(".com/p"), col("id")).as("url"),
+        when(col("id") % 5 === 0, lit(Double.NaN))
+          .when(col("id") % 7 === 0, lit(null).cast("double"))
+          .otherwise((col("id") % 6).cast("double")).as("score"))
+    def window(n: Int) = {
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("host")).orderBy(col("score").desc, col("doc_id").asc)
+      pages.withColumn("host", WebOps.host(col("url")))
+        .withColumn("rk", row_number().over(w).cast("long"))
+        .where(col("rk") <= n)
+    }
+    for (n <- Seq(3, 8, 30)) {
+      def rows(df: DataFrame) = df.select("doc_id", "host", "rk").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq.sorted
+      val got = rows(WebOps.capPerDomain(pages, maxPerDomain = n, orderCol = "score"))
+      assert(got == rows(window(n)), s"maxPerDomain = $n")
+    }
   }
 
   test("anchorText: top-k terms per target, count-desc with term tiebreak") {
