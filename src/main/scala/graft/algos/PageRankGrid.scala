@@ -64,7 +64,8 @@ import org.apache.spark.storage.StorageLevel
   * delta in the task that writes `pre'`, so tolerance mode, dangling
   * graphs and fixed-iteration mode alike cost one job per superstep. A
   * fresh uniform run takes `R`, `RH` and `H` from the build; a personalized
-  * or resumed run computes them in one job before the first superstep.
+  * or resumed run computes them, with a personalized reset's normalizer, in
+  * one job before the first superstep.
   *
   * At 10^12 vertices the same layout shards `stride ≤ 2^24` blocks across
   * executors; block-local arrays stay ≤128 MiB and the packed-key space
@@ -339,51 +340,52 @@ object PageRankGrid {
     val d = damping
     val uniform = 1.0 / n
 
-    // (id, v) rows -> one dense array per block, block b in partition b
-    def chunked(df: DataFrame): RDD[Array[Double]] = {
+    // (id, v) rows -> one dense array per block, block b in partition b,
+    // with the sum of every v the block received; rows with ids outside
+    // [0, n) go to block 0 and count toward that sum only
+    def chunked(df: DataFrame): RDD[(Array[Double], Double)] = {
       import spark.implicits._
+      val inRange = col("id") >= 0 && col("id") < n
       df.select(
-          expr(s"CAST(id DIV $stride AS INT)").as("b"),
-          expr(s"CAST(id % $stride AS INT)").as("l"),
+          when(inRange, expr(s"CAST(id DIV $stride AS INT)")).otherwise(0).as("b"),
+          when(inRange, expr(s"CAST(id % $stride AS INT)")).otherwise(-1).as("l"),
           col("v").cast("double"))
         .as[(Int, Int, Double)].rdd
         .map(t => (t._1, (t._2, t._3)))
         .partitionBy(grid.partitioner)
         .mapPartitionsWithIndex({ (b, it) =>
           val arr = new Array[Double](blockLen(n, stride, b))
-          while (it.hasNext) { val (_, (l, v)) = it.next(); arr(l) = v }
-          Iterator.single(arr)
+          var tot = 0.0
+          while (it.hasNext) { val (_, (l, v)) = it.next(); if (l >= 0) arr(l) = v; tot += v }
+          Iterator.single((arr, tot))
         }, preservesPartitioning = true)
     }
 
-    // reset chunks: null array = uniform 1/n (never materialized). Reset ids
-    // outside [0, n) count toward the normalizer only, as in PageRank.
-    val resetChunks: RDD[Array[Double]] = reset match {
-      case None => grid.cells.map(_ => null: Array[Double])
-      case Some(r) =>
-        val tot = r.agg(sum("reset")).head.getDouble(0)
-        require(tot > 0.0, "reset vector must not be all zeros")
-        chunked(r.where(col("id") >= 0 && col("id") < n).select(col("id"), (col("reset") / tot).as("v")))
-          .persist(StorageLevel.MEMORY_AND_DISK)
+    // raw reset chunks: null array = uniform 1/n (never materialized). Reset
+    // ids outside [0, n) count toward the normalizer only, as in PageRank.
+    val rawReset: RDD[(Array[Double], Double)] = reset match {
+      case None => grid.cells.map(_ => (null: Array[Double], 0.0))
+      case Some(r) => chunked(r.select(col("id"), col("reset").as("v")))
     }
 
     var state: RDD[RankBlock] = initial match {
       case Some(df) =>
         chunked(df.select(col("id"), col("rank").as("v")))
-          .mapPartitionsWithIndex((b, it) => Iterator.single(RankBlock(b, it.next(), 0.0, 0.0)))
+          .mapPartitionsWithIndex((b, it) => Iterator.single(RankBlock(b, it.next()._1, 0.0, 0.0)))
           .persist(StorageLevel.MEMORY_AND_DISK)
       case None =>
         grid.cells.map(cb => RankBlock(cb.sb, Array.fill(cb.invW.length)(uniform), 0.0, 0.0))
     }
 
     // R = Σreset, RH = Σ_{non-dangling} reset, H = Σ_{non-dangling} pre: a
-    // fresh uniform run knows all three from the build, otherwise one job
+    // fresh uniform run knows all three from the build, otherwise one job,
+    // which also sums a personalized reset's normalizer
     val nd = grid.nonDangling * uniform
-    val (rSum, rhSum, h0) =
-      if (reset.isEmpty && initial.isEmpty) (1.0, nd, nd)
-      else grid.cells.zipPartitions(resetChunks, state) { (cit, rit, sit) =>
+    val (rRaw, rhRaw, h0, resetTot) =
+      if (reset.isEmpty && initial.isEmpty) (1.0, nd, nd, 0.0)
+      else grid.cells.zipPartitions(rawReset, state) { (cit, rit, sit) =>
         val iw = cit.next().invW
-        val ra = rit.next()
+        val (ra, tot) = rit.next()
         val pre = sit.next().pre
         var r = 0.0; var rh = 0.0; var h = 0.0
         var i = 0
@@ -393,8 +395,15 @@ object PageRankGrid {
           if (iw(i) != 0.0) { rh += v; h += pre(i) }
           i += 1
         }
-        Iterator.single((r, rh, h))
-      }.reduce((a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3))
+        Iterator.single((r, rh, h, tot))
+      }.reduce((a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3, a._4 + b._4))
+    require(reset.isEmpty || resetTot > 0.0, "reset vector must not be all zeros")
+    val (rSum, rhSum) = if (reset.isEmpty) (rRaw, rhRaw) else (rRaw / resetTot, rhRaw / resetTot)
+    // normalized reset chunks, filled by the first superstep from the raw
+    // chunks' shuffle output (no job of their own)
+    val resetChunks: RDD[Array[Double]] =
+      if (reset.isEmpty) rawReset.map(_._1)
+      else rawReset.map { case (ra, _) => ra.map(_ / resetTot) }.persist(StorageLevel.MEMORY_AND_DISK)
 
     var c = 0.0
     var h = h0

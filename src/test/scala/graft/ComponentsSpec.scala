@@ -123,6 +123,61 @@ class ComponentsSpec extends AnyFunSuite {
     val fast = TestSession.longVector(Components.wcc(g), "comp").toSeq
     val dist = TestSession.longVector(Components.wcc(g, smallThreshold = 0L), "comp").toSeq
     assert(fast == dist) // identical min-id labels, not just same partition
+    // negative, sparse ids and no numVertices: the vertex set is the
+    // endpoints, and the labels are still the min id of each component
+    import spark.implicits._
+    val sparse = edges.map { case (a, b) => ((a - 150) * 1000003L, (b - 150) * 1000003L) }
+    val gs = LinkGraph(sparse.toDF("src", "dst"), directed = true, None)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.select("id", "comp").as[(Long, Long)].collect().sorted.toSeq
+    val fastS = rows(Components.wcc(gs))
+    assert(fastS == rows(Components.wcc(gs, smallThreshold = 0L)))
+    assert(fastS.map(_._1) == sparse.flatMap(e => Seq(e._1, e._2)).distinct.sorted)
+    assert(fastS.exists(_._2 < 0) && fastS.forall { case (id, c) => c <= id })
+  }
+
+  test("WCC distributed path: a shuffled-id long path converges in O(log n) rounds, one job each") {
+    // plain pointer jumping needs O(n) rounds when ids do not increase along
+    // the path; parent hooking keeps it logarithmic
+    val n = 2000
+    val perm = new scala.util.Random(11).shuffle((0L until n.toLong).toVector)
+    val g = LinkGraph(spark, n, (0 until n - 1).map(i => (perm(i), perm(i + 1))), directed = false)
+    val (m, jobs) = JobCounter(spark)(
+      TestSession.longVector(Components.wcc(g, maxIter = 16, smallThreshold = 0L), "comp").toSeq)
+    info(s"${jobs.size} jobs")
+    assert(m.forall(_ == 0L))
+    assert(jobs.size <= 16 + 4) // rounds + the gate count, the output collect
+  }
+
+  test("WCC: an endpoint outside [0, n) fails both paths naming n and the edge") {
+    import spark.implicits._
+    val g = LinkGraph(Seq((0L, 1L), (5L, -1L), (7L, 12L), (2L, 12L)).toDF("src", "dst"),
+      directed = false, Some(10L))
+    val shown = Seq("5 -> -1", "-1 -> 5", "7 -> 12", "12 -> 7", "2 -> 12", "12 -> 2")
+    for (gate <- Seq(1000000L, 0L)) {
+      val e = intercept[IllegalArgumentException](Components.wcc(g, smallThreshold = gate).collect())
+      assert(e.getMessage.contains("[0, 10)") && shown.exists(e.getMessage.contains), e.getMessage)
+    }
+  }
+
+  test("WCC durable run: one snapshot and one metrics set per round, last snapshot == result") {
+    val rnd = new scala.util.Random(3)
+    val n = 120
+    val edges = Seq.fill(90)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+    val g = LinkGraph(spark, n, edges, directed = false)
+    val store = new graft.core.CheckpointStore(
+      java.nio.file.Files.createTempDirectory("graft-wcc-ckpt").toString, "wcc")
+    import spark.implicits._
+    def rows(df: org.apache.spark.sql.DataFrame) = df.select("id", "comp").as[(Long, Long)].collect().sorted.toSeq
+    val durable = rows(Components.wcc(g, store = Some(store)))
+    assert(durable == rows(Components.wcc(g)))
+    val rounds = store.latestIter(spark).get
+    // the run converged in exactly `rounds` rounds: one fewer does not
+    assert(intercept[IllegalArgumentException](
+      Components.wcc(g, smallThreshold = 0L, maxIter = rounds - 1)).getMessage.contains("did not converge"))
+    assert(rows(store.load(spark, rounds)) == durable)
+    val metrics = store.metrics(spark).groupBy("iter").agg(org.apache.spark.sql.functions.sum("rows"))
+      .as[(Int, Long)].collect().sorted.toSeq
+    assert(metrics == (1 to rounds).map(i => (i, n.toLong)))
   }
 
   test("SCC refines WCC (property)") {

@@ -37,10 +37,9 @@ class PageRankGridSpec extends AnyFunSuite {
       ids.size
     }
     // outside the supersteps, measured at local[4] with AQE: a uniform run
-    // has the build and the output scan; a personalized one adds the reset
-    // total (an SQL aggregate, two jobs under AQE) and the one job for
-    // R, RH and H
-    for ((name, reset, setUp) <- Seq(("uniform", None, 2), ("personalized", personalized(300), 5))) {
+    // has the build and the output scan; a personalized one adds the one job
+    // for R, RH, H and the reset total
+    for ((name, reset, setUp) <- Seq(("uniform", None, 2), ("personalized", personalized(300), 3))) {
       val (j2, j6) = (jobs(reset, 2), jobs(reset, 6))
       info(s"$name reset: ${(j6 - j2) / 4.0} jobs per superstep, ${j2 - 2} outside them")
       assert((j6 - j2) / 4.0 == 1.0, s"$name reset")
