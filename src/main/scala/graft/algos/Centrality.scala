@@ -47,13 +47,12 @@ object Centrality {
         val rows = eDf.collect()
         val vids = kernelVids(g, rows)
         val n = vids.length
-        val idx = new java.util.HashMap[Long, Int](n * 2)
-        vids.zipWithIndex.foreach { case (id, i) => idx.put(id, i) }
+        val idx = new graft.core.VertexSlots(vids)
         val src = new Array[Int](rows.length); val dst = new Array[Int](rows.length)
         val w = new Array[Double](rows.length)
         var i = 0
         while (i < rows.length) {
-          src(i) = idx.get(rows(i).getLong(0)); dst(i) = idx.get(rows(i).getLong(1))
+          src(i) = idx(rows(i).getLong(0)); dst(i) = idx(rows(i).getLong(1))
           w(i) = rows(i).getDouble(2); i += 1
         }
         var x = Array.fill(n)(1.0 / math.sqrt(n.toDouble))
@@ -166,13 +165,12 @@ object Centrality {
         val rows = eDf.collect()
         val vids = kernelVids(g, rows)
         val n = vids.length
-        val idx = new java.util.HashMap[Long, Int](n * 2)
-        vids.zipWithIndex.foreach { case (id, i) => idx.put(id, i) }
+        val idx = new graft.core.VertexSlots(vids)
         val src = new Array[Int](rows.length); val dst = new Array[Int](rows.length)
         val w = new Array[Double](rows.length)
         var i = 0
         while (i < rows.length) {
-          src(i) = idx.get(rows(i).getLong(0)); dst(i) = idx.get(rows(i).getLong(1))
+          src(i) = idx(rows(i).getLong(0)); dst(i) = idx(rows(i).getLong(1))
           w(i) = rows(i).getDouble(2); i += 1
         }
         var hub = Array.fill(n)(1.0 / math.sqrt(n.toDouble))

@@ -62,9 +62,9 @@ object Components {
     // once for the gate count and once more for the output set. That double
     // recompute was the dominant cost of every dedup query that ends in a
     // WCC over candidate pairs (q_embed_dedup_lsh: 3 full pipeline runs).
-    val adj = g.bidirected.select(col("src"), col("dst"))
-      .repartition(col("src"))
-      .persist()
+    // Persisted as read: neither the kernel's collect nor the block build
+    // (its own HashPartitioner shuffle) uses a partitioning by src.
+    val adj = g.bidirected.select(col("src"), col("dst")).persist()
     // adaptive small-input fast path (the AQE posture, decided by a runtime
     // COUNT, never by assumption): WCC is a frequent inner stage — LSH
     // near-dup clustering, embedding dedup, line dedup all run it on a

@@ -81,8 +81,7 @@ object LabelProp {
             buf.toArray
         }
         val n = vids.length
-        val idx = new java.util.HashMap[Long, Int](n * 2)
-        vids.zipWithIndex.foreach { case (id, i) => idx.put(id, i) }
+        val idx = new graft.core.VertexSlots(vids)
         // non-loop arcs as parallel arrays (bidirected already carries both
         // directions; vote flows src -> dst)
         val plain = rows.filter(r => r.getLong(0) != r.getLong(1))
@@ -91,7 +90,7 @@ object LabelProp {
         val aW = new Array[Double](plain.length)
         var i = 0
         while (i < plain.length) {
-          aSrc(i) = idx.get(plain(i).getLong(0)); aDst(i) = idx.get(plain(i).getLong(1))
+          aSrc(i) = idx(plain(i).getLong(0)); aDst(i) = idx(plain(i).getLong(1))
           aW(i) = plain(i).getDouble(2); i += 1
         }
         var memb: Array[Long] = vids.clone()

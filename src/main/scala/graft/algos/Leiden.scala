@@ -394,20 +394,19 @@ object Leiden {
       val nwMap = new java.util.HashMap[Long, Double]()
       nodeWeights.select("id", "nw").collect()
         .foreach(r => nwMap.put(r.getLong(0), r.getDouble(1)))
-      val idx = new java.util.HashMap[Long, Int](vids.length * 2)
-      vids.zipWithIndex.foreach { case (id, i) => idx.put(id, i) }
+      val idx = new graft.core.VertexSlots(vids)
       val n = vids.length
       val nw = Array.tabulate(n)(i => nwMap.getOrDefault(vids(i), 1.0))
       val plain = rows.filter(r => r.getLong(0) != r.getLong(1))
       val off = new Array[Int](n + 1)
       plain.foreach { r =>
-        off(idx.get(r.getLong(0)) + 1) += 1; off(idx.get(r.getLong(1)) + 1) += 1
+        off(idx(r.getLong(0)) + 1) += 1; off(idx(r.getLong(1)) + 1) += 1
       }
       for (i <- 1 to n) off(i) += off(i - 1)
       val fill = off.clone()
       val nbrs = new Array[Int](plain.length * 2); val ws = new Array[Double](plain.length * 2)
       plain.foreach { r =>
-        val a = idx.get(r.getLong(0)); val b = idx.get(r.getLong(1)); val w = r.getDouble(2)
+        val a = idx(r.getLong(0)); val b = idx(r.getLong(1)); val w = r.getDouble(2)
         nbrs(fill(a)) = b; ws(fill(a)) = w; fill(a) += 1
         nbrs(fill(b)) = a; ws(fill(b)) = w; fill(b) += 1
       }

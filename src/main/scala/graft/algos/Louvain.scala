@@ -88,25 +88,24 @@ object Louvain {
         return spark.createDataset(spark.sparkContext.parallelize(
           vids.toSeq.map(v => (v, v)),
           spark.sparkContext.defaultParallelism)).toDF("id", "label")
-      val idx = new java.util.HashMap[Long, Int](vids.length * 2)
-      vids.zipWithIndex.foreach { case (id, i) => idx.put(id, i) }
+      val idx = new graft.core.VertexSlots(vids)
       val n = vids.length
       val k = new Array[Double](n)
       rows.foreach { r =>
-        k(idx.get(r.getLong(0))) += r.getDouble(2)
-        k(idx.get(r.getLong(1))) += r.getDouble(2)
+        k(idx(r.getLong(0))) += r.getDouble(2)
+        k(idx(r.getLong(1))) += r.getDouble(2)
       }
       // non-loop adjacency, both directions, CSR
       val plain = rows.filter(r => r.getLong(0) != r.getLong(1))
       val off = new Array[Int](n + 1)
       plain.foreach { r =>
-        off(idx.get(r.getLong(0)) + 1) += 1; off(idx.get(r.getLong(1)) + 1) += 1
+        off(idx(r.getLong(0)) + 1) += 1; off(idx(r.getLong(1)) + 1) += 1
       }
       for (i <- 1 to n) off(i) += off(i - 1)
       val fill = off.clone()
       val nbrs = new Array[Int](plain.length * 2); val ws = new Array[Double](plain.length * 2)
       plain.foreach { r =>
-        val a = idx.get(r.getLong(0)); val b = idx.get(r.getLong(1)); val w = r.getDouble(2)
+        val a = idx(r.getLong(0)); val b = idx(r.getLong(1)); val w = r.getDouble(2)
         nbrs(fill(a)) = b; ws(fill(a)) = w; fill(a) += 1
         nbrs(fill(b)) = a; ws(fill(b)) = w; fill(b) += 1
       }

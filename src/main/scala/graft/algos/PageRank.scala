@@ -1,7 +1,7 @@
 package graft.algos
 
-import graft.core.{CheckpointStore, Csr, Iterate, LinkGraph}
-import org.apache.spark.sql.{DataFrame, Observation}
+import graft.core.{CheckpointStore, LinkGraph, VertexSlots}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** PageRank by power iteration over the edge table.
@@ -18,40 +18,33 @@ import org.apache.spark.sql.functions._
   *     and personalized 0.3333/0.5166/0.0166 at damping 0.5
   *     (`test_structural.py:395-404`).
   *
-  * Three physical strategies behind one driver loop (north_star):
+  * One distributed engine, [[PageRankGrid]] (GridBlocks): a grid of packed
+  * CSR edge cells and one Spark job per superstep, durable supersteps
+  * included (each task writes its block's snapshot). It runs every mode:
+  * tolerance and fixed-iteration, uniform and personalized, weighted,
+  * durable and resumed; a graph without `numVertices` is relabelled to dense
+  * ids first.
   *
-  *  - **EdgeJoin** (default): the row-normalized link table is computed once
-  *    and hash-partitioned by `src`, so the per-superstep `ranks ⋈ links`
-  *    join co-locates without reshuffling the (huge) link table; only the
-  *    (small) rank vector shuffles. `groupBy(dst).sum` gets map-side partial
-  *    aggregation — for an algebraic aggregate the partial/final split IS
-  *    the skew treatment (each hot dst receives at most one partial row per
-  *    map task); AQE handles residual join skew.
-  *  - **CsrBlocks**: partition-local CSR arrays inside DataFrame columns
-  *    ([[graft.core.Csr]]); messages come from a per-partition zip kernel
-  *    instead of a join.
-  *  - **HubBroadcast(k)**: explicit high-degree-vertex handling — the top-k
-  *    out-degree sources' links are split off, their rank slice (tiny) is
-  *    broadcast every superstep, and only the long-tail links go through the
-  *    shuffled join. Kills both the shuffle volume and the join skew the
-  *    Zipfian web graph would otherwise put on hub partitions.
-  *
-  * The dangling term costs no extra join: a non-dangling row-normalized
-  * vertex emits exactly its rank, so danglingMass = 1 - sum(messages).
-  * Every superstep cuts lineage ([[graft.core.Lineage]] or a durable parquet
-  * snapshot via [[graft.core.CheckpointStore]]) so the plan stays O(1) per
-  * iteration and runs resume mid-computation.
+  * The kernel gate: a fixed-iteration, in-memory, fresh run of the default
+  * strategy on a graph with at most `smallThreshold` vertices and edges is
+  * collected to the driver and iterated as arrays (two jobs in all, the
+  * oracle-mirrored mode). Tolerance-mode, durable and resumed runs never
+  * take it.
   */
 object PageRank {
 
   sealed trait Strategy
+  /** The default strategy: the gated driver kernel when the run qualifies,
+    * else `GridBlocks(0)`. The name is kept from the DataFrame edge-join loop
+    * that this default used to run; that loop is gone.
+    */
   case object EdgeJoin extends Strategy
-  final case class CsrBlocks(partitions: Int = 64) extends Strategy
-  final case class HubBroadcast(k: Int = 10000) extends Strategy
-  /** Grid-partitioned CSR SpMV ([[PageRankGrid]]): dense ids required (an
-    * edge outside `[0, n)` fails the build), 8 bytes/edge, a build that reads
-    * the edge table once, and one two-stage RDD job per superstep in every
-    * mode, the convergence delta included. `p = 0` auto-sizes.
+  /** Grid-partitioned CSR SpMV ([[PageRankGrid]]) with `p` blocks, always,
+    * whatever the run's size (`p = 0` auto-sizes): dense ids when
+    * `numVertices` is set (an edge outside `[0, n)` fails the build), 8
+    * bytes/edge, a build that reads the edge table once, and one two-stage
+    * RDD job per superstep in every mode, the convergence delta and a
+    * durable snapshot included.
     */
   final case class GridBlocks(p: Int = 0) extends Strategy
 
@@ -59,10 +52,11 @@ object PageRank {
       perIterSec: Seq[Double] = Nil)
 
   /** @param reset optional personalization DataFrame (id, reset); normalized
-    *              internally. All-zero reset is an error like the reference
-    *              (`test_structural.py:396`).
+    *              internally (ids outside the vertex set count toward the
+    *              normalizer only). All-zero reset is an error like the
+    *              reference (`test_structural.py:396`).
     * @param fixedIters when set, run exactly this many iterations with no
-    *              per-iteration convergence action (SQL-oracle parity mode).
+    *              convergence test (SQL-oracle parity mode).
     */
   def run(
       g: LinkGraph,
@@ -107,281 +101,117 @@ object PageRank {
       strategy: Strategy,
       smallThreshold: Long = 8000000L
   ): Result = {
-    strategy match {
-      case GridBlocks(p) =>
-        return PageRankGrid.run(g, damping, tol, maxIter, reset, fixedIters, store, initial, startIter, p)
-      case _ =>
+    val gated = strategy == EdgeJoin && fixedIters.isDefined && store.isEmpty && initial.isEmpty &&
+      g.numVertices.forall(_ <= smallThreshold)
+    val p = strategy match {
+      case GridBlocks(p0) => p0
+      case EdgeJoin       => 0
     }
-    // Gated driver kernel for the FIXED-ITERATION in-memory uniform-reset
-    // mode (the oracle-mirrored mode; r5 kernel posture — Brandes / BZ /
-    // fixed-sweep Louvain precedent): a 15-iteration power loop on a
-    // gate-sized graph costs ~2 scheduled jobs per superstep plus AQE
-    // re-planning — pure driver overhead that one collect + an array loop
-    // replaces with 2 jobs total. The kernel replicates the distributed
-    // update exactly (same row-normalization, same dangling-mass formula,
-    // same uniform init, same reset normalization for personalized runs);
-    // per-vertex message sums are IEEE-order-dependent either way (shuffle
-    // order varies run to run), and the parity spec pins kernel ==
-    // distributed at 1e-9. Tolerance-mode, durable-store and resumed runs
-    // always stay distributed.
-    if (fixedIters.isDefined && store.isEmpty && initial.isEmpty
-        && g.numVertices.forall(_ <= smallThreshold)
-        && strategy == EdgeJoin) {
-      val eDf = g.outView.select("src", "dst", "weight")
-      if (eDf.count() <= smallThreshold) {
-        val spark = g.spark
-        import spark.implicits._
-        val rows = eDf.collect()
-        val vids: Array[Long] = g.numVertices match {
-          case Some(n0) => Array.tabulate(n0.toInt)(_.toLong)
-          case None =>
-            val seen = new java.util.HashSet[Long]()
-            val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-            rows.foreach { r =>
-              val a = r.getLong(0); val b = r.getLong(1)
-              if (seen.add(a)) buf += a
-              if (seen.add(b)) buf += b
-            }
-            buf.toArray
-        }
-        val n = vids.length
-        require(n > 0, "empty graph")
-        val idx = new java.util.HashMap[Long, Int](n * 2)
-        vids.zipWithIndex.foreach { case (id, i) => idx.put(id, i) }
-        // with numVertices set, an endpoint outside 0..n-1 has no slot
-        def slot(id: Long): Int = {
-          require(idx.containsKey(id), s"edge endpoint $id is outside the vertex ids 0..${n - 1} (n = $n)")
-          idx.get(id)
-        }
-        val outw = new Array[Double](n)
-        rows.foreach(r => outw(slot(r.getLong(0))) += r.getDouble(2))
-        val src = new Array[Int](rows.length)
-        val dst = new Array[Int](rows.length)
-        val p = new Array[Double](rows.length)
-        var i = 0
-        while (i < rows.length) {
-          val r = rows(i)
-          src(i) = slot(r.getLong(0)); dst(i) = slot(r.getLong(1))
-          p(i) = r.getDouble(2) / outw(src(i))
-          i += 1
-        }
-        // personalization: same math as the distributed branch — total over
-        // the FULL reset frame (ids outside the vertex set contribute to the
-        // normalizer only), missing vertices coalesce to 0
-        val resetArr: Array[Double] = reset match {
-          case None => Array.fill(n)(1.0 / n)
-          case Some(r) =>
-            val rRows = r.select(col("id"), col("reset").cast("double")).collect()
-            var tot = 0.0
-            rRows.foreach(rr => tot += rr.getDouble(1))
-            require(tot > 0.0, "reset vector must not be all zeros")
-            val arr = new Array[Double](n)
-            rRows.foreach { rr =>
-              if (idx.containsKey(rr.getLong(0)))
-                arr(idx.get(rr.getLong(0))) = rr.getDouble(1) / tot
-            }
-            arr
-        }
-        // branch on the same STATIC property the distributed loop branches
-        // on: without dangling vertices NO mass correction is applied, even
-        // when a personalized reset leaves total rank below 1 (reset ids
-        // outside the vertex set count only in the normalizer) — applying
-        // the correction unconditionally diverged 1.9e-2 by iteration 7 in
-        // the parity spec
-        val hasOut = new Array[Boolean](n)
-        var si = 0
-        while (si < rows.length) { hasOut(src(si)) = true; si += 1 }
-        var hasDangling = false
-        var hv = 0
-        while (hv < n) { if (!hasOut(hv)) hasDangling = true; hv += 1 }
-        var rank = Array.fill(n)(1.0 / n)
-        var it = 0
-        val iters = fixedIters.get
-        while (it < iters) {
-          val msg = new Array[Double](n)
-          var j = 0
-          while (j < rows.length) { msg(dst(j)) += p(j) * rank(src(j)); j += 1 }
-          val danglingMass =
-            if (!hasDangling) 0.0
-            else {
-              var msgTotal = 0.0
-              var v = 0
-              while (v < n) { msgTotal += msg(v); v += 1 }
-              math.max(0.0, 1.0 - msgTotal)
-            }
-          val next = new Array[Double](n)
-          var v = 0
-          while (v < n) {
-            next(v) = (1.0 - damping + damping * danglingMass) * resetArr(v) + damping * msg(v)
-            v += 1
+    (if (gated) kernel(g, damping, reset, fixedIters.get, smallThreshold) else None)
+      .getOrElse(PageRankGrid.run(g, damping, tol, maxIter, reset, fixedIters, store, initial, startIter, p))
+  }
+
+  /** The gated driver kernel for the FIXED-ITERATION in-memory mode (r5
+    * kernel posture — Brandes / BZ / fixed-sweep Louvain precedent): a
+    * 15-iteration power loop on a gate-sized graph costs a scheduled job per
+    * superstep plus the build; one collect + an array loop replaces it with
+    * 2 jobs total. `None` when the edge count exceeds the gate. It computes
+    * the same update as [[PageRankGrid]] (same row-normalization, same
+    * dangling-mass formula, same uniform init, same reset normalization);
+    * per-vertex message sums are IEEE-order-dependent either way, and the
+    * parity spec pins kernel == GridBlocks at 1e-9.
+    */
+  private def kernel(g: LinkGraph, damping: Double, reset: Option[DataFrame], iters: Int,
+                     smallThreshold: Long): Option[Result] = {
+    val eDf = g.outView.select("src", "dst", "weight")
+    if (eDf.count() <= smallThreshold) {
+      val spark = g.spark
+      import spark.implicits._
+      val rows = eDf.collect()
+      val vids: Array[Long] = g.numVertices match {
+        case Some(n0) => Array.tabulate(n0.toInt)(_.toLong)
+        case None =>
+          val seen = new java.util.HashSet[Long]()
+          val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
+          rows.foreach { r =>
+            val a = r.getLong(0); val b = r.getLong(1)
+            if (seen.add(a)) buf += a
+            if (seen.add(b)) buf += b
           }
-          rank = next
-          it += 1
-        }
-        val out = spark.createDataset(spark.sparkContext.parallelize(
-          vids.indices.map(i2 => (vids(i2), rank(i2))).toSeq,
-          spark.sparkContext.defaultParallelism)).toDF("id", "rank")
-        return Result(out, startIter + iters, Double.MaxValue, Nil)
+          buf.toArray
       }
-    }
-    val vertices = g.vertices.localCheckpoint(true)
-    val n = vertices.count()
-    require(n > 0, "empty graph")
-    val e = g.outView
-
-    // ---- strategy-specific static state + message kernel -----------------
-    // Each strategy yields UNAGGREGATED message rows (id, m); aggregation
-    // happens in the loop so the no-dangling path can fold the reset
-    // distribution into the SAME groupBy (one exchange fewer per superstep).
-    val persisted = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Dataset[_]]
-    val messageRows: DataFrame => DataFrame = strategy match {
-      case EdgeJoin =>
-        val outw = e.groupBy("src").agg(sum("weight").as("outw"))
-        val links = e.join(outw, "src")
-          .select(col("src"), col("dst"), (col("weight") / col("outw")).as("p"))
-          .repartition(col("src")).persist()
-        links.count(); persisted += links
-        ranks =>
-          links.join(ranks, links("src") === ranks("id"))
-            .select(col("dst").as("id"), (col("p") * col("rank")).as("m"))
-
-      case CsrBlocks(p) =>
-        val blocks = Csr.build(e, p).persist()
-        blocks.count(); persisted += blocks
-        ranks => Csr.messages(blocks, ranks, p).select(col("id"), col("msg").as("m"))
-
-      case HubBroadcast(k) =>
-        val outw = e.groupBy("src").agg(sum("weight").as("outw"))
-        val links = e.join(outw, "src")
-          .select(col("src"), col("dst"), (col("weight") / col("outw")).as("p"))
-        val hubs = outw.orderBy(col("outw").desc, col("src")).limit(k)
-          .select(col("src")).localCheckpoint(true)
-        val hubLinks = links.join(hubs, Seq("src"), "left_semi")
-          .repartition(col("src")).persist()
-        val tailLinks = links.join(hubs, Seq("src"), "left_anti")
-          .repartition(col("src")).persist()
-        hubLinks.count(); tailLinks.count()
-        persisted += hubLinks; persisted += tailLinks
-        ranks => {
-          val hubRanks = ranks.join(hubs.withColumnRenamed("src", "id"), Seq("id"), "left_semi")
-          val hubMsgs = hubLinks.join(broadcast(hubRanks), hubLinks("src") === hubRanks("id"))
-            .select(col("dst").as("id"), (col("p") * col("rank")).as("m"))
-          val tailMsgs = tailLinks.join(ranks, tailLinks("src") === ranks("id"))
-            .select(col("dst").as("id"), (col("p") * col("rank")).as("m"))
-          tailMsgs.union(hubMsgs)
-        }
-    }
-    val messages: DataFrame => DataFrame =
-      ranks => messageRows(ranks).groupBy("id").agg(sum("m").as("msg"))
-
-    // ---- normalized reset distribution ------------------------------------
-    val resetDf = (reset match {
-      case Some(r) =>
-        val tot = r.agg(sum("reset")).head.getDouble(0)
-        require(tot > 0.0, "reset vector must not be all zeros")
-        vertices.join(r, Seq("id"), "left")
-          .select(col("id"), (coalesce(col("reset"), lit(0.0)) / tot).as("reset"))
-      case None =>
-        vertices.select(col("id"), lit(1.0 / n).as("reset"))
-    }).localCheckpoint(true)
-
-    var ranks = initial
-      .getOrElse(resetDf.select(col("id"), lit(1.0 / n).as("rank")))
-      .transform(graft.core.Lineage.cut)
-    var iter = startIter
-    var delta = Double.MaxValue
-    val maxI = fixedIters.map(_ + startIter).getOrElse(maxIter)
-    val checkConvergence = fixedIters.isEmpty
-
-    // Static property: does any vertex lack out-edges? If none do, dangling
-    // mass is identically zero and the per-superstep scalar job (plus the
-    // message materialization it needs) disappears — the whole superstep is
-    // ONE pipelined job. Web graphs DO have dangling pages; that general
-    // path soft-persists msgs within the iteration so the dangling scalar
-    // and the rank update share one heavy job instead of two.
-    val hasDangling = !vertices
-      .join(e.select(col("src").as("id")).distinct(), Seq("id"), "left_anti").isEmpty
-
-    // ranks is hard-cut EVERY superstep so plan depth stays constant.
-    // (Chaining soft cuts across iterations nests InMemoryRelations, whose
-    // plan *description* — built for every SQL-execution event — expands
-    // shared subtrees and grows exponentially: observed as explainString OOM.)
-    // Tolerance mode fuses the convergence delta into the SAME execution
-    // that materializes the cut: the previous rank rides along as an extra
-    // column (`__old`), so no separate shuffle join of two rank snapshots
-    // runs per superstep (round-2 verdict: the per-iteration driver-action
-    // count is the serial floor that caps scaling efficiency). In memory,
-    // the delta is a cached-scan aggregate over the checkpoint. A durable
-    // run observes it instead (`Dataset.observe`) inside the snapshot write
-    // itself and projects `__old` away before writing, so the checkpoint
-    // schema stays (id, rank) and the delta costs no job of its own. The
-    // in-memory cut is an RDD action (`localCheckpoint`), which reports no
-    // observed metrics, hence the two ways of reading one fused delta.
-    val deltaOf = max(abs(col("rank") - coalesce(col("__old"), col("rank"))))
-    // Fixed-iteration in-memory runs don't need a per-superstep barrier: the
-    // rank state is referenced exactly ONCE per superstep (the message join),
-    // so the uncut plan grows linearly, not exponentially, and Catalyst
-    // handles a few chained supersteps fine. Cutting every `cutEvery`
-    // supersteps instead of every superstep removes (cutEvery-1)/cutEvery of
-    // the materialization jobs — the per-iteration driver-action floor that
-    // round-2's verdict identified as the serial scaling cap. Convergence
-    // mode and durable-store mode still cut every superstep (the delta
-    // action / the snapshot need the materialized state).
-    val cutEvery = if (checkConvergence || store.nonEmpty) 1 else 5
-    val iterTimes = scala.collection.mutable.ArrayBuffer.empty[Double]
-    while (iter < maxI && delta > tol) {
-      val t0 = System.currentTimeMillis()
-      var msgsToFree: Option[DataFrame] = None
-      val newRanks =
-        if (!hasDangling) {
-          // Fold the reset attach into the message aggregate: union the
-          // static (id, 0.0, reset) rows with the (id, m, 0.0) message rows
-          // and sum both columns in ONE groupBy — the whole superstep is
-          // join -> agg -> project, one exchange fewer than the
-          // agg -> join(reset) shape (guide §2.4). Bit-exact vs the join
-          // form: adding 0.0 terms to an FP sum is an identity, every id
-          // has exactly one reset row, and the final projection arithmetic
-          // is unchanged.
-          messageRows(ranks).select(col("id"), col("m"), lit(0.0).as("r"))
-            .unionAll(resetDf.select(col("id"), lit(0.0).as("m"), col("reset").as("r")))
-            .groupBy("id").agg(sum("m").as("msg"), sum("r").as("reset"))
-            .select(col("id"),
-              (lit(1.0 - damping) * col("reset")
-                + lit(damping) * coalesce(col("msg"), lit(0.0))).as("rank"))
-        } else {
-          val msgs = graft.core.Lineage.soft(messages(ranks))
-          msgsToFree = Some(msgs)
-          val msgTotal = msgs.agg(sum("msg")).head.get(0) match {
-            case null      => 0.0
-            case d: Double => d
+      val n = vids.length
+      require(n > 0, "empty graph")
+      // with numVertices set, an endpoint outside 0..n-1 has no slot
+      val slot = new VertexSlots(vids)
+      val outw = new Array[Double](n)
+      rows.foreach(r => outw(slot(r.getLong(0))) += r.getDouble(2))
+      val src = new Array[Int](rows.length)
+      val dst = new Array[Int](rows.length)
+      val p = new Array[Double](rows.length)
+      var i = 0
+      while (i < rows.length) {
+        val r = rows(i)
+        src(i) = slot(r.getLong(0)); dst(i) = slot(r.getLong(1))
+        p(i) = r.getDouble(2) / outw(src(i))
+        i += 1
+      }
+      // personalization: same math as GridBlocks — total over
+      // the FULL reset frame (ids outside the vertex set contribute to the
+      // normalizer only), missing vertices coalesce to 0
+      val resetArr: Array[Double] = reset match {
+        case None => Array.fill(n)(1.0 / n)
+        case Some(r) =>
+          val rRows = r.select(col("id"), col("reset").cast("double")).collect()
+          var tot = 0.0
+          rRows.foreach(rr => tot += rr.getDouble(1))
+          require(tot > 0.0, "reset vector must not be all zeros")
+          val arr = new Array[Double](n)
+          rRows.foreach { rr =>
+            if (slot.contains(rr.getLong(0)))
+              arr(slot(rr.getLong(0))) = rr.getDouble(1) / tot
           }
-          val danglingMass = math.max(0.0, 1.0 - msgTotal)
-          resetDf.join(msgs, Seq("id"), "left")
-            .select(col("id"),
-              ((lit(1.0 - damping) + lit(damping * danglingMass)) * col("reset")
-                + lit(damping) * coalesce(col("msg"), lit(0.0))).as("rank"))
+          arr
+      }
+      // branch on the same STATIC property GridBlocks branches on:
+      // without dangling vertices NO mass correction is applied, even
+      // when a personalized reset leaves total rank below 1 (reset ids
+      // outside the vertex set count only in the normalizer) — applying
+      // the correction unconditionally diverged 1.9e-2 by iteration 7 in
+      // the parity spec
+      val hasOut = new Array[Boolean](n)
+      var si = 0
+      while (si < rows.length) { hasOut(src(si)) = true; si += 1 }
+      var hasDangling = false
+      var hv = 0
+      while (hv < n) { if (!hasOut(hv)) hasDangling = true; hv += 1 }
+      var rank = Array.fill(n)(1.0 / n)
+      var it = 0
+      while (it < iters) {
+        val msg = new Array[Double](n)
+        var j = 0
+        while (j < rows.length) { msg(dst(j)) += p(j) * rank(src(j)); j += 1 }
+        val danglingMass =
+          if (!hasDangling) 0.0
+          else {
+            var msgTotal = 0.0
+            var v = 0
+            while (v < n) { msgTotal += msg(v); v += 1 }
+            math.max(0.0, 1.0 - msgTotal)
+          }
+        val next = new Array[Double](n)
+        var v = 0
+        while (v < n) {
+          next(v) = (1.0 - damping + damping * danglingMass) * resetArr(v) + damping * msg(v)
+          v += 1
         }
-      val withOld =
-        if (checkConvergence)
-          newRanks.join(ranks.select(col("id"), col("rank").as("__old")), Seq("id"), "left")
-        else newRanks
-      val observed = if (checkConvergence && store.nonEmpty) Some(Observation()) else None
-      val toCut = observed.fold(withOld)(o => withOld.observe(o, deltaOf.as("delta")).select("id", "rank"))
-      val cut =
-        if ((iter + 1) % cutEvery == 0 || iter + 1 == maxI)
-          Iterate.cut(toCut, iter + 1, store, t0)
-        else toCut
-      msgsToFree.foreach(_.unpersist())
-      if (checkConvergence)
-        delta = observed match {
-          case Some(o) => o.get("delta").asInstanceOf[Double]
-          case None    => cut.agg(deltaOf).head.getDouble(0)
-        }
-      ranks = cut.select("id", "rank")
-      iter += 1
-      iterTimes += (System.currentTimeMillis() - t0) / 1000.0
-    }
-    persisted.foreach(_.unpersist())
-    Result(ranks, iter, delta, iterTimes.toSeq)
+        rank = next
+        it += 1
+      }
+      val out = spark.createDataset(spark.sparkContext.parallelize(
+        vids.indices.map(i2 => (vids(i2), rank(i2))).toSeq,
+        spark.sparkContext.defaultParallelism)).toDF("id", "rank")
+      Some(Result(out, iters, Double.MaxValue, Nil))
+    } else None
   }
 }

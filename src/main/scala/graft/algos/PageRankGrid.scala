@@ -1,7 +1,7 @@
 package graft.algos
 
-import graft.core.{CheckpointStore, LinkGraph}
-import org.apache.spark.HashPartitioner
+import graft.core.{CheckpointStore, Ids, LinkGraph}
+import org.apache.spark.{HashPartitioner, SerializableWritable}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -13,9 +13,11 @@ import org.apache.spark.storage.StorageLevel
   * Same semantics as [[PageRank]] (reference `graphobject.c:5326-5439`:
   * damping 0.85, reset = 1-damping, dangling mass redistributed through the
   * reset distribution every iteration, weights row-normalized by
-  * out-strength), different physical plan. Requires dense vertex ids
-  * `0..n-1` (the north_star's web-page id space; [[graft.core.Ids]] densifies
-  * arbitrary graphs).
+  * out-strength), different physical plan; it is PageRank's only
+  * distributed engine. The grid needs dense vertex ids `0..n-1` (the
+  * north_star's web-page id space): a graph with `numVertices` must already
+  * have them, and [[run]] relabels a graph without it through
+  * [[graft.core.Ids.relabel]].
   *
   * Layout — a P×P grid of edge cells:
   *   - vertex block `b` owns ids `[b*stride, (b+1)*stride)`, stride ≤ 2^24;
@@ -28,7 +30,7 @@ import org.apache.spark.storage.StorageLevel
   *     scale vector instead of storing per-edge probabilities).
   *
   * Superstep = one RDD job, two stages, ZERO per-iteration Catalyst planning
-  * (the DataFrame loop re-plans and re-codegens on the driver every
+  * (a DataFrame superstep re-plans and re-codegens on the driver every
   * superstep — a serial cost that caps scaling efficiency; here the driver
   * does O(P) work per iteration):
   *   1. SpMV stage (P tasks): partition `sb` computes
@@ -47,25 +49,40 @@ import org.apache.spark.storage.StorageLevel
   *      O(n·√P) when P must grow — documented, not needed at sandbox scale),
   *      applies `pre' = (1-d)*reset + d*msg`, and zips the old state to
   *      compute the block's share of `H'` and its largest rank change
-  *      (below). The job's one action returns `(H', maxDelta)`.
+  *      (below). The job's one action collects each block's `H'` share,
+  *      largest change and snapshot row count (0 in memory).
   *
   * Dangling-mass trick: a dangling vertex contributes no messages, so the
   * true rank is
-  *   `rank[i] = pre[i] + c * reset[i]`  with  `c = 1 - Σpre`
+  *   `rank[i] = pre[i] + c * reset[i]`
   * — the correction is a DRIVER SCALAR folded into the next iteration's
   * `rScaled`, never materialized into the vectors. The scalar is predicted
   * before the superstep runs rather than summed after it: row-normalized,
-  * every non-dangling vertex sends exactly its rank, so with the static
-  * sums `R = Σreset` and `RH = Σ_{non-dangling} reset`, and
-  * `H = Σ_{non-dangling} pre`,
-  *   `c' = max(0, 1 - ((1-d)*R + d*(H + c*RH)))`
-  * which is `1 - Σpre'` in real arithmetic (it differs by rounding only).
-  * Knowing `c'` up front lets the reduce stage compute the convergence
-  * delta in the task that writes `pre'`, so tolerance mode, dangling
-  * graphs and fixed-iteration mode alike cost one job per superstep. A
-  * fresh uniform run takes `R`, `RH` and `H` from the build; a personalized
-  * or resumed run computes them, with a personalized reset's normalizer, in
-  * one job before the first superstep.
+  * every non-dangling vertex sends exactly its rank, so with the static sum
+  * `RH = Σ_{non-dangling} reset` and `H = Σ_{non-dangling} pre`, the message
+  * total is `H + c*RH` and
+  *   `c' = d * max(0, 1 - (H + c*RH))`   (0 on a graph with no dangling vertex)
+  * — the dangling mass `1 - Σmsg` redistributed through the reset, exactly
+  * [[PageRank]]'s driver-kernel update (a personalized reset whose ids miss
+  * the vertex set sums below 1, and the kernel then leaves the deficit
+  * uncorrected; so does this). Knowing `c'` up front lets the reduce stage
+  * compute the convergence delta in the task that writes `pre'`, so
+  * tolerance mode, dangling graphs and fixed-iteration mode alike cost one
+  * job per superstep. A fresh uniform run takes `RH` and `H` from the build;
+  * a personalized or resumed run computes them, with a personalized reset's
+  * normalizer, in one job before the first superstep.
+  *
+  * Durable mode (`store = Some(s)`): the superstep is still one job. The
+  * driver empties `iter=K` ([[CheckpointStore.clear]]) before it runs; the
+  * action's task, right after it materializes block `b` of `pre'`, writes
+  * that block's final ranks `pre' + c'*reset` (`c'` is known up front) as
+  * `state/iter=K/part-<b>.parquet` with parquet-hadoop
+  * ([[CheckpointStore.writePart]]) and returns the row count with its `H'`
+  * share and delta. The driver then commits the metrics line and
+  * `_SUCCESS` from those counts ([[CheckpointStore.commit]]): no SQL
+  * write, no footer read, no re-read. A resumed run reads the snapshot back
+  * as its initial ranks. The in-memory superstep is the same job without
+  * the write.
   *
   * At 10^12 vertices the same layout shards `stride ≤ 2^24` blocks across
   * executors; block-local arrays stay ≤128 MiB and the packed-key space
@@ -300,6 +317,12 @@ object PageRankGrid {
   // the iteration loop
   // ---------------------------------------------------------------------
 
+  /** Run PageRank on the grid. A graph without `numVertices` is relabelled
+    * to dense ids with [[graft.core.Ids.relabel]] first; its reset and
+    * initial ranks are mapped through the same dictionary (an id outside
+    * the vertex set still counts toward the reset normalizer), and every
+    * output row, snapshots included, carries the original id.
+    */
   def run(
       g: LinkGraph,
       damping: Double,
@@ -312,20 +335,35 @@ object PageRankGrid {
       startIter: Int,
       p0: Int): PageRank.Result = {
     val spark = g.spark
-    val n = g.vcount()
-    require(n > 0, "empty graph")
-    val p = if (p0 > 0) p0 else autoP(spark, n)
     // no weight column on the base table => outView's weight is the literal
     // 1.0 the view adds; ship bare packed keys through the build shuffle
-    val grid = build(spark, g.outView, n, p,
-      unweighted = !g.edges.columns.contains("weight"))
-    try runOnGrid(spark, grid, damping, tol, maxIter, reset, fixedIters, store, initial, startIter)
+    val unweighted = !g.edges.columns.contains("weight")
+    val (dense, mapping) = g.numVertices match {
+      case Some(_) => (g, None)
+      case None    => val (m, rg) = Ids.relabel(g); (rg, Some(m))
+    }
+    // (id, v) in the graph's ids -> (dense id, v); ids outside the vertex
+    // set become -1, which the chunking counts toward a block's sum only
+    def toDense(df: DataFrame, v: String): DataFrame = mapping match {
+      case None => df.select(col("id"), col(v).as("v"))
+      case Some(m) =>
+        df.select(col("id").as("__key"), col(v).as("v"))
+          .join(m.select(col("old_id").as("__key"), col("id")), Seq("__key"), "left")
+          .select(coalesce(col("id"), lit(-1L)).as("id"), col("v"))
+    }
+    val n = dense.vcount()
+    require(n > 0, "empty graph")
+    val p = if (p0 > 0) p0 else autoP(spark, n)
+    val grid = build(spark, dense.outView, n, p, unweighted)
+    try runOnGrid(spark, grid, mapping, damping, tol, maxIter, reset.map(toDense(_, "reset")),
+      fixedIters, store, initial.map(toDense(_, "rank")), startIter)
     finally grid.unpersist()
   }
 
   private def runOnGrid(
       spark: SparkSession,
       grid: Grid,
+      mapping: Option[DataFrame],
       damping: Double,
       tol: Double,
       maxIter: Int,
@@ -334,6 +372,7 @@ object PageRankGrid {
       store: Option[CheckpointStore],
       initial: Option[DataFrame],
       startIter: Int): PageRank.Result = {
+    import spark.implicits._
     val n = grid.n
     val p = grid.p
     val stride = grid.stride
@@ -344,7 +383,6 @@ object PageRankGrid {
     // with the sum of every v the block received; rows with ids outside
     // [0, n) go to block 0 and count toward that sum only
     def chunked(df: DataFrame): RDD[(Array[Double], Double)] = {
-      import spark.implicits._
       val inRange = col("id") >= 0 && col("id") < n
       df.select(
           when(inRange, expr(s"CAST(id DIV $stride AS INT)")).otherwise(0).as("b"),
@@ -361,49 +399,68 @@ object PageRankGrid {
         }, preservesPartitioning = true)
     }
 
+    // each block's vertex ids in the graph's own id space: null = dense ids
+    // `b*stride + i` (never materialized), else the relabelling's old ids
+    val idChunks: RDD[Array[Long]] = mapping match {
+      case None => grid.cells.map(_ => null: Array[Long])
+      case Some(m) =>
+        m.select(col("id"), col("old_id")).as[(Long, Long)].rdd
+          .map { case (i, o) => ((i / stride).toInt, ((i % stride).toInt, o)) }
+          .partitionBy(grid.partitioner)
+          .mapPartitionsWithIndex({ (b, it) =>
+            val arr = new Array[Long](blockLen(n, stride, b))
+            it.foreach { case (_, (l, o)) => arr(l) = o }
+            Iterator.single(arr)
+          }, preservesPartitioning = true)
+          .persist(StorageLevel.MEMORY_AND_DISK)
+    }
+
     // raw reset chunks: null array = uniform 1/n (never materialized). Reset
     // ids outside [0, n) count toward the normalizer only, as in PageRank.
     val rawReset: RDD[(Array[Double], Double)] = reset match {
       case None => grid.cells.map(_ => (null: Array[Double], 0.0))
-      case Some(r) => chunked(r.select(col("id"), col("reset").as("v")))
+      case Some(r) => chunked(r)
     }
 
     var state: RDD[RankBlock] = initial match {
       case Some(df) =>
-        chunked(df.select(col("id"), col("rank").as("v")))
+        chunked(df)
           .mapPartitionsWithIndex((b, it) => Iterator.single(RankBlock(b, it.next()._1, 0.0, 0.0)))
           .persist(StorageLevel.MEMORY_AND_DISK)
       case None =>
         grid.cells.map(cb => RankBlock(cb.sb, Array.fill(cb.invW.length)(uniform), 0.0, 0.0))
     }
 
-    // R = Σreset, RH = Σ_{non-dangling} reset, H = Σ_{non-dangling} pre: a
-    // fresh uniform run knows all three from the build, otherwise one job,
-    // which also sums a personalized reset's normalizer
+    // RH = Σ_{non-dangling} reset, H = Σ_{non-dangling} pre: a fresh uniform
+    // run knows both from the build, otherwise one job, which also sums a
+    // personalized reset's normalizer
     val nd = grid.nonDangling * uniform
-    val (rRaw, rhRaw, h0, resetTot) =
-      if (reset.isEmpty && initial.isEmpty) (1.0, nd, nd, 0.0)
+    val (rhRaw, h0, resetTot) =
+      if (reset.isEmpty && initial.isEmpty) (nd, nd, 0.0)
       else grid.cells.zipPartitions(rawReset, state) { (cit, rit, sit) =>
         val iw = cit.next().invW
         val (ra, tot) = rit.next()
         val pre = sit.next().pre
-        var r = 0.0; var rh = 0.0; var h = 0.0
+        var rh = 0.0; var h = 0.0
         var i = 0
         while (i < iw.length) {
-          val v = if (ra == null) uniform else ra(i)
-          r += v
-          if (iw(i) != 0.0) { rh += v; h += pre(i) }
+          if (iw(i) != 0.0) { rh += (if (ra == null) uniform else ra(i)); h += pre(i) }
           i += 1
         }
-        Iterator.single((r, rh, h, tot))
-      }.reduce((a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3, a._4 + b._4))
+        Iterator.single((rh, h, tot))
+      }.reduce((a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3))
     require(reset.isEmpty || resetTot > 0.0, "reset vector must not be all zeros")
-    val (rSum, rhSum) = if (reset.isEmpty) (rRaw, rhRaw) else (rRaw / resetTot, rhRaw / resetTot)
+    val rhSum = if (reset.isEmpty) rhRaw else rhRaw / resetTot
+    val hasDangling = grid.nonDangling < n
     // normalized reset chunks, filled by the first superstep from the raw
     // chunks' shuffle output (no job of their own)
     val resetChunks: RDD[Array[Double]] =
       if (reset.isEmpty) rawReset.map(_._1)
       else rawReset.map { case (ra, _) => ra.map(_ / resetTot) }.persist(StorageLevel.MEMORY_AND_DISK)
+    // a durable run's tasks write their snapshot blocks with the driver's
+    // Hadoop configuration
+    val hadoopConf = store.map(_ => spark.sparkContext.broadcast(
+      new SerializableWritable(spark.sparkContext.hadoopConfiguration)))
 
     var c = 0.0
     var h = h0
@@ -418,8 +475,10 @@ object PageRankGrid {
       val cc = c
       // the dangling scalar of the state this superstep writes, known before
       // it runs (see "Dangling-mass trick")
-      val cNew = math.max(0.0, 1.0 - ((1.0 - d) * rSum + d * (h + cc * rhSum)))
+      val cNew = if (hasDangling) d * math.max(0.0, 1.0 - (h + cc * rhSum)) else 0.0
       val old = state
+      // a durable superstep writes iteration iter+1 into an emptied directory
+      val snapshotDir = store.map(_.clear(spark, iter + 1)).orNull
 
       // stage 1: per-source-block SpMV into per-destination-block partials
       val msgs: RDD[(Int, Partial)] =
@@ -515,30 +574,44 @@ object PageRankGrid {
         }
       next.persist(StorageLevel.MEMORY_AND_DISK)
       next.localCheckpoint()
-      // the superstep's one action: it materializes `next`
-      val (hNew, dMax) = next.map(b => (b.h, b.delta))
-        .reduce((a, b) => (a._1 + b._1, math.max(a._2, b._2)))
-      if (checkConvergence) delta = dMax
-
-      store.foreach { s =>
-        s.save(spark, iter + 1, ranksDF(spark, next, resetChunks, cNew, uniform, stride), t0); ()
-      }
+      // the superstep's one action: it materializes `next` and returns each
+      // block's (H' share, max delta, snapshot rows); a durable superstep's
+      // task writes its block's final ranks `pre' + c'·reset` in the same pass
+      val blocks =
+        if (snapshotDir == null) next.map(b => (b.h, b.delta, 0L)).collect()
+        else next.zipPartitions(resetChunks, idChunks) { (sit, rit, iit) =>
+          val blk = sit.next()
+          val ra = rit.next()
+          val ids = iit.next()
+          val base = blk.b.toLong * stride
+          val rows =
+            if (blk.pre.isEmpty) 0L
+            else CheckpointStore.writePart(hadoopConf.get.value.value, snapshotDir, blk.b, blk.pre.length,
+              i => if (ids == null) base + i else ids(i),
+              i => blk.pre(i) + cNew * (if (ra == null) uniform else ra(i)))
+          Iterator.single((blk.h, blk.delta, rows))
+        }.collect()
+      if (checkConvergence) delta = blocks.map(_._2).max
+      store.foreach(_.commit(spark, iter + 1,
+        blocks.indices.collect { case b if blocks(b)._3 > 0 => (b, blocks(b)._3) }, t0))
       // `next` is materialized and cut from its lineage: the old state can go
       old.unpersist(false)
       state = next
       c = cNew
-      h = hNew
+      h = blocks.map(_._1).sum
       iter += 1
       iterTimes += (System.currentTimeMillis() - t0) / 1000.0
     }
 
-    val out = ranksDF(spark, state, resetChunks, c, uniform, stride)
+    val out = ranksDF(spark, state, resetChunks, idChunks, c, uniform, stride)
       .persist(StorageLevel.MEMORY_AND_DISK)
     // fill the cache with one scan job (a count would add an aggregate
     // exchange, run as further jobs under AQE)
     out.foreachPartition((it: Iterator[Row]) => it.foreach(_ => ()))
     state.unpersist(false)
     resetChunks.unpersist(false)
+    idChunks.unpersist(false)
+    hadoopConf.foreach(_.destroy())
     PageRank.Result(out, iter, delta, iterTimes.toSeq)
   }
 
@@ -549,15 +622,17 @@ object PageRankGrid {
       spark: SparkSession,
       state: RDD[RankBlock],
       resetChunks: RDD[Array[Double]],
+      idChunks: RDD[Array[Long]],
       c: Double,
       uniform: Double,
       stride: Int): DataFrame = {
-    val rows = state.zipPartitions(resetChunks) { (sit, rit) =>
+    val rows = state.zipPartitions(resetChunks, idChunks) { (sit, rit, iit) =>
       val blk = sit.next()
       val ra = rit.next()
+      val ids = iit.next()
       val base = blk.b.toLong * stride
       blk.pre.iterator.zipWithIndex.map { case (v, i) =>
-        Row(base + i, v + c * (if (ra == null) uniform else ra(i)))
+        Row(if (ids == null) base + i else ids(i), v + c * (if (ra == null) uniform else ra(i)))
       }
     }
     spark.createDataFrame(rows,

@@ -1,8 +1,13 @@
 package graft.core
 
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter, ParquetWriter}
+import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.api.RecordConsumer
+import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.types.StructType
@@ -24,22 +29,33 @@ import org.apache.spark.sql.types.StructType
   *   root/metrics/iter-K-<uuid>.json
   *                             one JSON-lines file per saved iteration, one
   *                             line per written part file:
-  *                             (partition, rows, run_id, iter, ms), where
-  *                             `partition` is the part file's index and
-  *                             `rows` comes from its parquet footer
+  *                             (partition, rows, run_id, iter, ms)
   *
-  * A save starts no Spark job beyond the state write. The re-read
-  * carries the state's schema (no schema-inference job) and the metrics
-  * are footer reads plus one small file written through the Hadoop
-  * `FileSystem` on the driver (no shuffle, no parquet append). A metrics
-  * file is written under a `_tmp-` name and then renamed, so a crash
-  * mid-write leaves only a name that Spark's file listing skips.
+  * Two ways to write iteration K:
+  *   - [[save]] writes a DataFrame through Spark's parquet writer, which
+  *     commits `_SUCCESS`; `partition` is the part file's index and `rows`
+  *     comes from its parquet footer. It starts no Spark job beyond the
+  *     write, and the re-read carries the state's schema (no inference job).
+  *   - task-written snapshots (PageRank's GridBlocks supersteps): the driver
+  *     empties `iter=K` with [[clear]], each task of the superstep writes its
+  *     block's `(id, rank)` rows with [[CheckpointStore.writePart]] to
+  *     `part-<block>.parquet` (a retried task overwrites its own file), and
+  *     after the superstep's action [[commit]] writes the metrics file from
+  *     the row counts the writers returned (`partition` = block, no footer
+  *     reads) and then `_SUCCESS`, the commit point.
+  *
+  * Metrics are one small file written through the Hadoop `FileSystem` on the
+  * driver (no shuffle, no parquet append), under a `_tmp-` name and then
+  * renamed, so a crash mid-write leaves only a name that Spark's file
+  * listing skips.
   */
 final class CheckpointStore(val root: String, val runId: String) {
   import CheckpointStore._
 
   private def stateDir(iter: Int) = s"$root/state/iter=$iter"
   private def metricsDir = s"$root/metrics"
+  private def fs(spark: SparkSession): FileSystem =
+    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Write state for iteration `iter` and its metrics file; returns the
     * re-read DataFrame, which also truncates plan lineage (the driver-loop
@@ -48,25 +64,51 @@ final class CheckpointStore(val root: String, val runId: String) {
   def save(spark: SparkSession, iter: Int, state: DataFrame, startedAtMs: Long): DataFrame = {
     state.write.mode(SaveMode.Overwrite).parquet(stateDir(iter))
     val conf = spark.sparkContext.hadoopConfiguration
-    val out = new Path(root).getFileSystem(conf)
-    val files = out.listStatus(new Path(stateDir(iter))).map(_.getPath)
+    val files = fs(spark).listStatus(new Path(stateDir(iter))).map(_.getPath)
       .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
       .sortBy(_.getName)
-    val ms = System.currentTimeMillis() - startedAtMs
-    val lines = files.zipWithIndex.map { case (f, i) =>
+    val rows = files.zipWithIndex.map { case (f, i) =>
       val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-      val rows = try reader.getRecordCount finally reader.close()
-      new GenericRowWithSchema(Array[Any](i, rows, runId, iter, ms), MetricsSchema).json + "\n"
+      try (i, reader.getRecordCount) finally reader.close()
+    }
+    writeMetrics(spark, iter, rows.toSeq, startedAtMs)
+    spark.read.schema(state.schema).parquet(stateDir(iter))
+  }
+
+  /** Empty iteration `iter`'s state directory for a task-written snapshot
+    * (a stale commit marker or part file of an earlier run would otherwise
+    * survive); returns the directory the tasks write to.
+    */
+  def clear(spark: SparkSession, iter: Int): String = {
+    val dir = new Path(stateDir(iter))
+    val out = fs(spark)
+    out.delete(dir, true)
+    out.mkdirs(dir)
+    stateDir(iter)
+  }
+
+  /** Commit a task-written snapshot: the metrics file from `(block, rows)`
+    * as the part files' writers reported them, then `_SUCCESS`.
+    */
+  def commit(spark: SparkSession, iter: Int, rows: Seq[(Int, Long)], startedAtMs: Long): Unit = {
+    writeMetrics(spark, iter, rows, startedAtMs)
+    fs(spark).create(new Path(stateDir(iter), "_SUCCESS"), true).close()
+  }
+
+  private def writeMetrics(spark: SparkSession, iter: Int, rows: Seq[(Int, Long)], startedAtMs: Long): Unit = {
+    val ms = System.currentTimeMillis() - startedAtMs
+    val lines = rows.map { case (part, n) =>
+      new GenericRowWithSchema(Array[Any](part, n, runId, iter, ms), MetricsSchema).json + "\n"
     }
     // no '=' in the temporary name: Spark's listing keeps `_`-prefixed
     // names that contain one (partition directories)
+    val out = fs(spark)
     val uuid = java.util.UUID.randomUUID()
     val tmp = new Path(metricsDir, s"_tmp-$uuid.json")
     val dst = new Path(metricsDir, s"iter-$iter-$uuid.json")
     val w = out.create(tmp, false)
     try w.write(lines.mkString.getBytes(java.nio.charset.StandardCharsets.UTF_8)) finally w.close()
     if (!out.rename(tmp, dst)) throw new java.io.IOException(s"could not rename $tmp to $dst")
-    spark.read.schema(state.schema).parquet(stateDir(iter))
   }
 
   /** Latest checkpointed iteration, if any — the resume point. */
@@ -98,6 +140,54 @@ final class CheckpointStore(val root: String, val runId: String) {
 object CheckpointStore {
   private val MetricsSchema: StructType =
     StructType.fromDDL("partition INT, rows BIGINT, run_id STRING, iter INT, ms BIGINT")
+
+  /** The snapshot schema of a task-written part file, as Spark reads it:
+    * `(id BIGINT, rank DOUBLE)`.
+    */
+  private val SnapshotSchema = MessageTypeParser.parseMessageType(
+    "message spark_schema { required int64 id; required double rank; }")
+
+  /** One `(id, rank)` row, reused across a part file's records. */
+  private final class IdRank { var id = 0L; var rank = 0.0 }
+
+  private final class IdRankWrite extends WriteSupport[IdRank] {
+    private var out: RecordConsumer = _
+    override def init(conf: Configuration): WriteSupport.WriteContext =
+      new WriteSupport.WriteContext(SnapshotSchema, java.util.Collections.emptyMap[String, String]())
+    override def prepareForWrite(rc: RecordConsumer): Unit = out = rc
+    override def write(r: IdRank): Unit = {
+      out.startMessage()
+      out.startField("id", 0); out.addLong(r.id); out.endField("id", 0)
+      out.startField("rank", 1); out.addDouble(r.rank); out.endField("rank", 1)
+      out.endMessage()
+    }
+  }
+
+  private final class IdRankWriter(file: Path) extends ParquetWriter.Builder[IdRank, IdRankWriter](file) {
+    override protected def self(): IdRankWriter = this
+    override protected def getWriteSupport(conf: Configuration): WriteSupport[IdRank] = new IdRankWrite
+  }
+
+  /** Write one block of a task-written snapshot (executor side): rows
+    * `(id(i), rank(i))` for `i < rows` to `dir/part-<block>.parquet`,
+    * replacing the file an earlier attempt of the same task left. Returns
+    * the number of rows written, the count [[CheckpointStore.commit]] logs.
+    */
+  def writePart(conf: Configuration, dir: String, block: Int, rows: Int,
+                id: Int => Long, rank: Int => Double): Long = {
+    val w = new IdRankWriter(new Path(dir, f"part-$block%05d.parquet"))
+      .withConf(conf)
+      .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
+      .withCompressionCodec(CompressionCodecName.SNAPPY)
+      .withDictionaryEncoding(false)
+      .build()
+    try {
+      val r = new IdRank
+      var i = 0
+      while (i < rows) { r.id = id(i); r.rank = rank(i); w.write(r); i += 1 }
+    } finally w.close()
+    rows.toLong
+  }
 }
 
 /** In-memory lineage truncation for iterative loops.

@@ -159,4 +159,13 @@ class CommunitySpec extends AnyFunSuite {
     }
     ids.foreach(i => assert(got(i) == core(i), s"vertex $i: got ${got(i)}, want ${core(i)}"))
   }
+
+  test("LPA fixed-iter driver kernel: an out-of-range endpoint fails naming the id and n") {
+    // n = 3, but one edge ends at 5: the kernel must not fold it into slot 0
+    val g = LinkGraph(spark.createDataFrame(Seq((0L, 1L), (1L, 5L))).toDF("src", "dst"),
+      directed = false, Some(3L))
+    val e = intercept[IllegalArgumentException](
+      LabelProp.run(g, fixedIters = Some(2), minTieBreak = true))
+    assert(e.getMessage.contains("endpoint 5") && e.getMessage.contains("n = 3"), e.getMessage)
+  }
 }

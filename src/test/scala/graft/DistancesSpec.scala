@@ -310,4 +310,15 @@ class DistancesSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](Distances.topologicalLayers(cyc))
     intercept[IllegalArgumentException](Distances.topologicalLayers(cyc, smallThreshold = 0L))
   }
+
+  test("evcent/HITS fixed-iter driver kernels: an out-of-range endpoint fails naming the id and n") {
+    // n = 3, but one edge ends at 5: the kernel must not fold it into slot 0
+    val g = LinkGraph(spark.createDataFrame(Seq((0L, 1L), (1L, 5L))).toDF("src", "dst"),
+      directed = false, Some(3L))
+    for (run <- Seq[() => Any](() => Centrality.eigenvector(g, fixedIters = Some(2)),
+                               () => Centrality.hits(g, fixedIters = Some(2)))) {
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains("endpoint 5") && e.getMessage.contains("n = 3"), e.getMessage)
+    }
+  }
 }

@@ -169,4 +169,15 @@ class LeidenSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("fixed-sweep driver kernel: an out-of-range endpoint fails naming the id and n") {
+    import org.apache.spark.sql.functions.{col, lit}
+    // n = 3, but one edge ends at 5: the kernel must not fold it into slot 0
+    val g = LinkGraph(spark.createDataFrame(Seq((0L, 1L), (1L, 5L))).toDF("src", "dst"),
+      directed = false, Some(3L))
+    val nw = g.vertices.select(col("id"), lit(1.0).as("nw"))
+    val e = intercept[IllegalArgumentException](
+      Leiden.localMove(g, nw, gammaEff = 0.5, fixedSweeps = Some(2)))
+    assert(e.getMessage.contains("endpoint 5") && e.getMessage.contains("n = 3"), e.getMessage)
+  }
 }

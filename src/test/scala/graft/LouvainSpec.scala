@@ -60,4 +60,12 @@ class LouvainSpec extends AnyFunSuite {
       Louvain.communityMultilevel(g), "label").toSeq)
     assert(fin == Seq(0, 0, 0, 0, 0, 1, 1, 1, 1, 1), s"got $fin")
   }
+
+  test("fixed-sweep driver kernel: an out-of-range endpoint fails naming the id and n") {
+    // n = 3, but one edge ends at 5: the kernel must not fold it into slot 0
+    val g = LinkGraph(spark.createDataFrame(Seq((0L, 1L), (1L, 5L))).toDF("src", "dst"),
+      directed = false, Some(3L))
+    val e = intercept[IllegalArgumentException](Louvain.localMove(g, fixedSweeps = Some(2)))
+    assert(e.getMessage.contains("endpoint 5") && e.getMessage.contains("n = 3"), e.getMessage)
+  }
 }

@@ -2,11 +2,15 @@ package graft
 
 import graft.algos.PageRank
 import graft.core.LinkGraph
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The three physical PageRank strategies must agree to float tolerance on
-  * the same graph (byte-identical plans are not required — north_star §6
-  * re-validation of the CSR/salting paths against the slice-0 results).
+/** GridBlocks, PageRank's one distributed engine, against the fixed-iteration
+  * driver kernel, an independent implementation of the same update: the
+  * kernel is what the default strategy (`PageRank.EdgeJoin`, the name kept
+  * for the default) runs for a fixed-iteration in-memory run of this size.
+  * Each parity case runs the grid first and the kernel for the iterations
+  * the grid took.
   */
 class StrategySpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
@@ -21,24 +25,20 @@ class StrategySpec extends AnyFunSuite {
     LinkGraph(spark, n, edges, directed = true)
   }
 
-  test("CSR-block and hub-broadcast PageRank match edge-join to 1e-9") {
-    val g = randomGraph(300, 2500)
-    val base = TestSession.vector(PageRank.run(g, tol = 1e-12, maxIter = 40).ranks, "rank")
-    val csr = TestSession.vector(
-      PageRank.run(g, tol = 1e-12, maxIter = 40, strategy = PageRank.CsrBlocks(8)).ranks, "rank")
-    val hub = TestSession.vector(
-      PageRank.run(g, tol = 1e-12, maxIter = 40, strategy = PageRank.HubBroadcast(20)).ranks, "rank")
-    base.indices.foreach { i =>
-      assert(math.abs(base(i) - csr(i)) < 1e-9, s"csr differs at $i")
-      assert(math.abs(base(i) - hub(i)) < 1e-9, s"hub differs at $i")
-    }
+  /** (kernel, grid) ranks: GridBlocks(p) in tolerance mode, then the driver
+    * kernel for the same number of iterations.
+    */
+  private def gridVsKernel(g: LinkGraph, p: Int, tol: Double, maxIter: Int, damping: Double = 0.85,
+                           reset: Option[DataFrame] = None): (Array[Double], Array[Double]) = {
+    val grid = PageRank.run(g, damping = damping, tol = tol, maxIter = maxIter, reset = reset,
+      strategy = PageRank.GridBlocks(p))
+    val kern = PageRank.run(g, damping = damping, fixedIters = Some(grid.iterations), reset = reset)
+    (TestSession.vector(kern.ranks, "rank"), TestSession.vector(grid.ranks, "rank"))
   }
 
   test("grid-CSR PageRank matches edge-join to 1e-9 (directed, with dangling)") {
     val g = randomGraph(300, 2500) // remainderUnsigned leaves some ids dangling
-    val base = TestSession.vector(PageRank.run(g, tol = 1e-12, maxIter = 40).ranks, "rank")
-    val grid = TestSession.vector(
-      PageRank.run(g, tol = 1e-12, maxIter = 40, strategy = PageRank.GridBlocks(7)).ranks, "rank")
+    val (base, grid) = gridVsKernel(g, 7, tol = 1e-12, maxIter = 40)
     base.indices.foreach { i =>
       assert(math.abs(base(i) - grid(i)) < 1e-9, s"grid differs at $i")
     }
@@ -54,11 +54,7 @@ class StrategySpec extends AnyFunSuite {
     }
     val g = LinkGraph.weighted(spark, 60, edges, directed = true)
     val reset = Some((0 until 60).map(i => (i.toLong, if (i % 7 == 0) 1.0 else 0.0)).toDF("id", "reset"))
-    val base = TestSession.vector(
-      PageRank.run(g, damping = 0.5, tol = 1e-12, maxIter = 60, reset = reset).ranks, "rank")
-    val grid = TestSession.vector(
-      PageRank.run(g, damping = 0.5, tol = 1e-12, maxIter = 60, reset = reset,
-        strategy = PageRank.GridBlocks(5)).ranks, "rank")
+    val (base, grid) = gridVsKernel(g, 5, tol = 1e-12, maxIter = 60, damping = 0.5, reset = reset)
     base.indices.foreach { i =>
       assert(math.abs(base(i) - grid(i)) < 1e-9, s"grid differs at $i")
     }
@@ -76,9 +72,7 @@ class StrategySpec extends AnyFunSuite {
 
   test("grid-CSR handles tiny graphs where most blocks are empty") {
     val g = LinkGraph(spark, 5, Seq((0L, 1L), (1L, 2L), (2L, 0L), (3L, 0L)), directed = true)
-    val base = TestSession.vector(PageRank.run(g, tol = 1e-12, maxIter = 80).ranks, "rank")
-    val grid = TestSession.vector(
-      PageRank.run(g, tol = 1e-12, maxIter = 80, strategy = PageRank.GridBlocks(0)).ranks, "rank")
+    val (base, grid) = gridVsKernel(g, 0, tol = 1e-12, maxIter = 80)
     base.indices.foreach(i => assert(math.abs(base(i) - grid(i)) < 1e-9))
   }
 
@@ -86,14 +80,6 @@ class StrategySpec extends AnyFunSuite {
     val g = LinkGraph.star(spark, 11)
     val v = TestSession.vector(
       PageRank.run(g, tol = 1e-10, maxIter = 200, strategy = PageRank.GridBlocks(3)).ranks, "rank")
-    assert(math.abs(v.max - 0.4668) < 5e-4)
-    assert(v.indexOf(v.max) == 0)
-  }
-
-  test("CSR strategy reproduces the Star(11) golden") {
-    val g = LinkGraph.star(spark, 11)
-    val v = TestSession.vector(
-      PageRank.run(g, tol = 1e-10, maxIter = 200, strategy = PageRank.CsrBlocks(4)).ranks, "rank")
     assert(math.abs(v.max - 0.4668) < 5e-4)
     assert(v.indexOf(v.max) == 0)
   }
