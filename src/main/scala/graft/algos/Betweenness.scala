@@ -158,20 +158,10 @@ object Betweenness {
       .select(col("src"), col("dst")).distinct()
     val rows = adjDf.limit((smallThreshold + 1).toInt).collect()
     if (rows.length > smallThreshold) return None
-    val idx = new java.util.HashMap[Long, Int]()
-    val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-    def intern(x: Long): Int =
-      if (idx.containsKey(x)) idx.get(x)
-      else { idx.put(x, ids.length); ids += x; ids.length - 1 }
-    rows.foreach { r => intern(r.getLong(0)); intern(r.getLong(1)) }
-    val n = ids.length
-    val off = new Array[Int](n + 1)
-    rows.foreach(r => off(idx.get(r.getLong(0)) + 1) += 1)
-    for (i <- 1 to n) off(i) += off(i - 1)
-    val fill = off.clone(); val nbrs = new Array[Int](rows.length)
-    rows.foreach { r =>
-      val i = idx.get(r.getLong(0)); nbrs(fill(i)) = idx.get(r.getLong(1)); fill(i) += 1
-    }
+    val lg = graft.core.LocalGraph(rows)
+    val (ids, n) = (lg.ids, lg.n)
+    val csr = lg.out()
+    val (off, nbrs) = (csr.off, csr.nbr)
     val vb = new Array[Double](n)
     val eb = new java.util.HashMap[(Long, Long), Double]()
     val dist = new Array[Int](n); val sigma = new Array[Double](n)

@@ -1,6 +1,6 @@
 package graft.algos
 
-import graft.core.{Lineage, LinkGraph, Mode}
+import graft.core.{Lineage, LinkGraph, LocalGraph}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -44,17 +44,8 @@ object Centrality {
       if (eDf.count() <= smallThreshold) {
         val spark = g.spark
         import spark.implicits._
-        val rows = eDf.collect()
-        val vids = kernelVids(g, rows)
-        val n = vids.length
-        val idx = new graft.core.VertexSlots(vids)
-        val src = new Array[Int](rows.length); val dst = new Array[Int](rows.length)
-        val w = new Array[Double](rows.length)
-        var i = 0
-        while (i < rows.length) {
-          src(i) = idx(rows(i).getLong(0)); dst(i) = idx(rows(i).getLong(1))
-          w(i) = rows(i).getDouble(2); i += 1
-        }
+        val lg = LocalGraph.numbered(eDf.collect(), g.numVertices)
+        val (vids, n, src, dst, w) = (lg.ids, lg.n, lg.src, lg.dst, lg.weight)
         var x = Array.fill(n)(1.0 / math.sqrt(n.toDouble))
         var lambda = 0.0
         var iter = 0
@@ -63,7 +54,7 @@ object Centrality {
         while (iter < cap && !broke) {
           val y = new Array[Double](n)
           var j = 0
-          while (j < rows.length) { y(dst(j)) += w(j) * x(src(j)); j += 1 }
+          while (j < lg.m) { y(dst(j)) += w(j) * x(src(j)); j += 1 }
           var v = 0
           while (v < n) { y(v) += shift * x(v); v += 1 }
           var n2 = 0.0
@@ -128,24 +119,6 @@ object Centrality {
     Spectral(scaled, lambda, iter)
   }
 
-  /** Vertex array for the gated kernels: explicit range when numVertices
-    * is set, else the collected rows' endpoints (the same derivation
-    * g.vertices performs — WCC/Louvain small-path precedent).
-    */
-  private def kernelVids(g: LinkGraph, rows: Array[org.apache.spark.sql.Row]): Array[Long] =
-    g.numVertices match {
-      case Some(n0) => Array.tabulate(n0.toInt)(_.toLong)
-      case None =>
-        val seen = new java.util.HashSet[Long]()
-        val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-        rows.foreach { r =>
-          val a = r.getLong(0); val b = r.getLong(1)
-          if (seen.add(a)) buf += a
-          if (seen.add(b)) buf += b
-        }
-        buf.toArray
-    }
-
   /** HITS hubs & authorities (alternating power iteration), both scaled to
     * max = 1. Returns (id, hub, authority).
     */
@@ -162,17 +135,8 @@ object Centrality {
       if (eDf.count() <= smallThreshold) {
         val spark = g.spark
         import spark.implicits._
-        val rows = eDf.collect()
-        val vids = kernelVids(g, rows)
-        val n = vids.length
-        val idx = new graft.core.VertexSlots(vids)
-        val src = new Array[Int](rows.length); val dst = new Array[Int](rows.length)
-        val w = new Array[Double](rows.length)
-        var i = 0
-        while (i < rows.length) {
-          src(i) = idx(rows(i).getLong(0)); dst(i) = idx(rows(i).getLong(1))
-          w(i) = rows(i).getDouble(2); i += 1
-        }
+        val lg = LocalGraph.numbered(eDf.collect(), g.numVertices)
+        val (vids, n, src, dst, w) = (lg.ids, lg.n, lg.src, lg.dst, lg.weight)
         var hub = Array.fill(n)(1.0 / math.sqrt(n.toDouble))
         var auth = hub.clone()
         var it2 = 0
@@ -180,7 +144,7 @@ object Centrality {
         while (it2 < cap) {
           val aRaw = new Array[Double](n)
           var j = 0
-          while (j < rows.length) { aRaw(dst(j)) += w(j) * hub(src(j)); j += 1 }
+          while (j < lg.m) { aRaw(dst(j)) += w(j) * hub(src(j)); j += 1 }
           var an2 = 0.0
           var v = 0
           while (v < n) { an2 += aRaw(v) * aRaw(v); v += 1 }
@@ -190,7 +154,7 @@ object Centrality {
           while (v < n) { aRaw(v) /= ad; v += 1 }
           val hRaw = new Array[Double](n)
           j = 0
-          while (j < rows.length) { hRaw(src(j)) += w(j) * aRaw(dst(j)); j += 1 }
+          while (j < lg.m) { hRaw(src(j)) += w(j) * aRaw(dst(j)); j += 1 }
           var hn2 = 0.0
           v = 0
           while (v < n) { hn2 += hRaw(v) * hRaw(v); v += 1 }

@@ -448,10 +448,12 @@ object Components {
     * matches the reference's `clusters(mode="strong")` up to relabeling.
     *
     * Scale note: chains — the O(n)-round worst case of the round-3 coloring
-    * implementation (SCCChainSpec pins this) — now resolve in ~2 rounds: the
-    * colorings converge in O(log n) jumped rounds, the (cf, cb) pairs of a
-    * chain are all distinct, so the split deletes every chain edge and the
-    * next trim pass clears the vertices wholesale.
+    * implementation (SCCChainSpec pins this) — now resolve in ~2 outer
+    * rounds: the (cf, cb) pairs of a chain are all distinct, so the split
+    * deletes every chain edge and the next trim pass clears the vertices
+    * wholesale. The colorings inside a round are not O(log n): without
+    * hooking, [[maxColor]]'s rounds grow with chain length on some id
+    * orders (a directed cycle with ids in order along it is one).
     */
   def scc(g: LinkGraph, maxRounds: Int = 200): DataFrame = {
     require(g.directed, "scc requires a directed graph")

@@ -1,6 +1,6 @@
 package graft.algos
 
-import graft.core.{Lineage, LinkGraph, Mode}
+import graft.core.{Lineage, LinkGraph, LocalGraph, Mode}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -66,31 +66,20 @@ object Distances {
       val spark = g.spark
       import spark.implicits._
       val srcIds = src.collect().map(_.getLong(0))
-      val rows = adj.collect()
-      val idx = new java.util.HashMap[Long, Int]()
-      val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-      def intern(x: Long): Int =
-        if (idx.containsKey(x)) idx.get(x)
-        else { idx.put(x, ids.length); ids += x; ids.length - 1 }
-      rows.foreach { r => intern(r.getLong(0)); intern(r.getLong(1)) }
-      val n = ids.length
+      val lg = LocalGraph(adj.collect())
+      val (ids, n) = (lg.ids, lg.n)
       // output bound: every origin can reach at most n vertices
       if (srcIds.length.toLong * math.max(n, 1).toLong <= 4000000L) {
-        val off = new Array[Int](n + 1)
-        rows.foreach(r => off(idx.get(r.getLong(0)) + 1) += 1)
-        for (i <- 1 to n) off(i) += off(i - 1)
-        val fill = off.clone(); val nbrs = new Array[Int](rows.length)
-        rows.foreach { r =>
-          val i = idx.get(r.getLong(0)); nbrs(fill(i)) = idx.get(r.getLong(1)); fill(i) += 1
-        }
+        val csr = lg.out()
+        val (off, nbrs) = (csr.off, csr.nbr)
         val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
         val dist = new Array[Int](n)
         val queue = new Array[Int](n)
         srcIds.foreach { o =>
           out += ((o, o, 0L))
-          if (idx.containsKey(o)) {
+          if (lg.contains(o)) {
             java.util.Arrays.fill(dist, -1)
-            val s = idx.get(o); dist(s) = 0
+            val s = lg.slot(o); dist(s) = 0
             var head = 0; var tail = 0
             queue(tail) = s; tail += 1
             while (head < tail) {
@@ -189,31 +178,18 @@ object Distances {
       val spark = g.spark
       import spark.implicits._
       val srcIds = src.collect().map(_.getLong(0))
-      val rows = adj.collect()
-      val idx = new java.util.HashMap[Long, Int]()
-      val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-      def intern(x: Long): Int =
-        if (idx.containsKey(x)) idx.get(x)
-        else { idx.put(x, ids.length); ids += x; ids.length - 1 }
-      rows.foreach { r => intern(r.getLong(0)); intern(r.getLong(1)) }
-      val n = ids.length
+      val lg = LocalGraph(adj.collect())
+      val (ids, n) = (lg.ids, lg.n)
       if (srcIds.length.toLong * math.max(n, 1).toLong <= 4000000L) {
-        val off = new Array[Int](n + 1)
-        rows.foreach(r => off(idx.get(r.getLong(0)) + 1) += 1)
-        for (i <- 1 to n) off(i) += off(i - 1)
-        val fill = off.clone()
-        val nbrs = new Array[Int](rows.length); val ws = new Array[Double](rows.length)
-        rows.foreach { r =>
-          val i = idx.get(r.getLong(0))
-          nbrs(fill(i)) = idx.get(r.getLong(1)); ws(fill(i)) = r.getDouble(2); fill(i) += 1
-        }
+        val csr = lg.out(weighted = true)
+        val (off, nbrs, ws) = (csr.off, csr.nbr, csr.w)
         val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
         val dist = new Array[Double](n)
         srcIds.foreach { o =>
           out += ((o, o, 0.0))
-          if (idx.containsKey(o)) {
+          if (lg.contains(o)) {
             java.util.Arrays.fill(dist, Double.PositiveInfinity)
-            val s = idx.get(o); dist(s) = 0.0
+            val s = lg.slot(o); dist(s) = 0.0
             val pq = new java.util.PriorityQueue[(Double, Int)](
               (a: (Double, Int), b: (Double, Int)) => java.lang.Double.compare(a._1, b._1))
             pq.add((0.0, s))
@@ -385,25 +361,13 @@ object Distances {
     // sampled-origin set (selected by the same Spark expression), so exact
     // and estimator modes both agree with the distributed loop.
     if (ue.count() <= smallThreshold) {
-      val es = ue.collect().map(r => (r.getLong(0), r.getLong(1)))
+      val lg = LocalGraph(ue.collect())
       ue.unpersist()
-      val idx = new java.util.HashMap[Long, Int]()
-      val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-      def intern(x: Long): Int =
-        if (idx.containsKey(x)) idx.get(x)
-        else { idx.put(x, ids.length); ids += x; ids.length - 1 }
-      es.foreach { e => intern(e._1); intern(e._2) }
-      val n = ids.length
-      val off = new Array[Int](n + 1)
-      es.foreach { case (a, b) => off(idx.get(a) + 1) += 1; off(idx.get(b) + 1) += 1 }
-      for (i <- 1 to n) off(i) += off(i - 1)
-      val fill = off.clone(); val nbrs = new Array[Int](es.length * 2)
-      es.foreach { case (a, b) =>
-        val i = idx.get(a); val j = idx.get(b)
-        nbrs(fill(i)) = j; fill(i) += 1; nbrs(fill(j)) = i; fill(j) += 1
-      }
+      val n = lg.n
+      val csr = lg.undirected()
+      val (off, nbrs) = (csr.off, csr.nbr)
       val srcIdx: Array[Int] = sources match {
-        case Some(df) => df.collect().map(r => idx.get(r.getLong(0)))
+        case Some(df) => df.collect().map(r => lg.slot(r.getLong(0)))
         case None     => (0 until n).toArray
       }
       val dist = new Array[Int](n); val queue = new Array[Int](n)
@@ -421,8 +385,8 @@ object Distances {
             j += 1
           }
         }
-        es.foreach { case (al, bl) =>
-          val a = idx.get(al); val b = idx.get(bl)
+        for (e <- 0 until lg.m) {
+          val a = lg.src(e); val b = lg.dst(e)
           val da = dist(a); val db = dist(b)
           if (da >= 0 && db >= 0) {
             if (da == db) best = math.min(best, 2L * da + 1)
@@ -585,18 +549,12 @@ object Distances {
     // peel round, cycles rejected with the same message.
     if (edges.count() <= smallThreshold && n <= smallThreshold) {
       import spark.implicits._
-      val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val vs = remaining.select("id").collect().map(_.getLong(0))
-      val idx = new java.util.HashMap[Long, Int](vs.length * 2)
-      vs.zipWithIndex.foreach { case (id, i) => idx.put(id, i) }
-      val nv = vs.length
+      val lg = LocalGraph(edges.collect(), first = remaining.select("id").collect().map(_.getLong(0)))
+      val (vs, nv) = (lg.ids, lg.n)
       val indeg = new Array[Int](nv)
-      val off = new Array[Int](nv + 1)
-      es.foreach { case (s, d) => off(idx.get(s) + 1) += 1; indeg(idx.get(d)) += 1 }
-      for (i <- 1 to nv) off(i) += off(i - 1)
-      val fill = off.clone(); val outNbr = new Array[Int](es.length)
-      es.foreach { case (s, d) =>
-        val i = idx.get(s); outNbr(fill(i)) = idx.get(d); fill(i) += 1 }
+      lg.dst.foreach(indeg(_) += 1)
+      val csr = lg.out()
+      val (off, outNbr) = (csr.off, csr.nbr)
       val layerOf = new Array[Int](nv)
       var frontier = (0 until nv).filter(indeg(_) == 0).toArray
       var done = 0; var lay = 0

@@ -51,25 +51,14 @@ object KCore {
     if (nEdges <= smallThreshold) {
       val spark = g.spark
       import spark.implicits._
-      val rows = adj.collect()
+      // the pairs are symmetric, so every vertex is a src and its out-degree
+      // in the CSR of the collected pairs is its degree
+      val lg = graft.core.LocalGraph(adj.collect())
       adj.unpersist()
-      val degm = new java.util.HashMap[Long, Int]()
-      rows.foreach { r => degm.merge(r.getLong(0), 1, Integer.sum) }
-      val ids = new Array[Long](degm.size)
-      val it = degm.keySet().iterator(); var w = 0
-      while (it.hasNext) { ids(w) = it.next(); w += 1 }
-      val idx = new java.util.HashMap[Long, Int](ids.length * 2)
-      ids.zipWithIndex.foreach { case (id, i) => idx.put(id, i) }
-      val n = ids.length
-      val deg0 = Array.tabulate(n)(i => degm.get(ids(i)))
-      // CSR of the collected pairs
-      val off = new Array[Int](n + 1)
-      rows.foreach(r => off(idx.get(r.getLong(0)) + 1) += 1)
-      for (i <- 1 to n) off(i) += off(i - 1)
-      val fill = off.clone(); val nbrs = new Array[Int](rows.length)
-      rows.foreach { r =>
-        val i = idx.get(r.getLong(0)); nbrs(fill(i)) = idx.get(r.getLong(1)); fill(i) += 1
-      }
+      val (ids, n) = (lg.ids, lg.n)
+      val csr = lg.out()
+      val (off, nbrs) = (csr.off, csr.nbr)
+      val deg0 = Array.tabulate(n)(i => off(i + 1) - off(i))
       // Batagelj-Zaveršnik bucket peel in nondecreasing-degree order
       val maxDeg = if (n == 0) 0 else deg0.max
       val bin = new Array[Int](maxDeg + 2)

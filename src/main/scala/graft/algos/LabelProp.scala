@@ -67,32 +67,12 @@ object LabelProp {
       if (eDf.count() <= smallThreshold) {
         val spark = g.spark
         import spark.implicits._
-        val rows = eDf.collect()
-        val vids: Array[Long] = g.numVertices match {
-          case Some(n0) => Array.tabulate(n0.toInt)(_.toLong)
-          case None =>
-            val seen = new java.util.HashSet[Long]()
-            val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-            rows.foreach { r =>
-              val a = r.getLong(0); val b = r.getLong(1)
-              if (seen.add(a)) buf += a
-              if (seen.add(b)) buf += b
-            }
-            buf.toArray
-        }
-        val n = vids.length
-        val idx = new graft.core.VertexSlots(vids)
+        val lg = graft.core.LocalGraph.numbered(eDf.collect(), g.numVertices)
+        val (vids, n) = (lg.ids, lg.n)
         // non-loop arcs as parallel arrays (bidirected already carries both
         // directions; vote flows src -> dst)
-        val plain = rows.filter(r => r.getLong(0) != r.getLong(1))
-        val aSrc = new Array[Int](plain.length)
-        val aDst = new Array[Int](plain.length)
-        val aW = new Array[Double](plain.length)
-        var i = 0
-        while (i < plain.length) {
-          aSrc(i) = idx(plain(i).getLong(0)); aDst(i) = idx(plain(i).getLong(1))
-          aW(i) = plain(i).getDouble(2); i += 1
-        }
+        val plain = Array.range(0, lg.m).filter(i => lg.src(i) != lg.dst(i))
+        val (aSrc, aDst, aW) = (plain.map(lg.src(_)), plain.map(lg.dst(_)), plain.map(lg.weight(_)))
         var memb: Array[Long] = vids.clone()
         var it = 0
         val iters = fixedIters.get

@@ -56,59 +56,32 @@ object Louvain {
         && g.numVertices.forall(_ <= smallThreshold)) {
       val spark = g.spark
       import spark.implicits._
-      val rows = e.select("src", "dst", "weight").collect()
-      e.unpersist()
-      // total weight from the collected rows (saves the pre-gate aggregate
-      // job; exact on integer-weight graphs, where any summation order
-      // yields the identical double — the same caveat every kernel
-      // aggregate in this file carries)
-      var totalW = 0.0
-      rows.foreach(r => totalW += r.getDouble(2))
-      val m2 = 2.0 * totalW
       // vertex set from the collected rows + explicit numVertices (the
       // g.vertices derivation is a full distinct over the bidirected
       // endpoint union - one more scheduled job the kernel doesn't need;
       // WCC small-path precedent). Kernel output does not depend on vids
       // order: sweeps are synchronous over the previous membership.
-      val vids: Array[Long] = g.numVertices match {
-        case Some(n0) => Array.tabulate(n0.toInt)(_.toLong)
-        case None =>
-          val seen = new java.util.HashSet[Long]()
-          val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-          rows.foreach { r =>
-            val a = r.getLong(0); val b = r.getLong(1)
-            if (seen.add(a)) buf += a
-            if (seen.add(b)) buf += b
-          }
-          buf.toArray
-      }
+      val lg = graft.core.LocalGraph.numbered(e.select("src", "dst", "weight").collect(), g.numVertices)
+      e.unpersist()
+      val (vids, n) = (lg.ids, lg.n)
+      // total weight from the collected rows (saves the pre-gate aggregate
+      // job; exact on integer-weight graphs, where any summation order
+      // yields the identical double — the same caveat every kernel
+      // aggregate in this file carries)
+      var totalW = 0.0
+      lg.weight.foreach(totalW += _)
+      val m2 = 2.0 * totalW
       // totalW == 0 degenerate (weightless graph): own-id labels, matching
       // the distributed early return below
       if (totalW == 0.0)
         return spark.createDataset(spark.sparkContext.parallelize(
           vids.toSeq.map(v => (v, v)),
           spark.sparkContext.defaultParallelism)).toDF("id", "label")
-      val idx = new graft.core.VertexSlots(vids)
-      val n = vids.length
       val k = new Array[Double](n)
-      rows.foreach { r =>
-        k(idx(r.getLong(0))) += r.getDouble(2)
-        k(idx(r.getLong(1))) += r.getDouble(2)
-      }
+      for (i <- 0 until lg.m) { k(lg.src(i)) += lg.weight(i); k(lg.dst(i)) += lg.weight(i) }
       // non-loop adjacency, both directions, CSR
-      val plain = rows.filter(r => r.getLong(0) != r.getLong(1))
-      val off = new Array[Int](n + 1)
-      plain.foreach { r =>
-        off(idx(r.getLong(0)) + 1) += 1; off(idx(r.getLong(1)) + 1) += 1
-      }
-      for (i <- 1 to n) off(i) += off(i - 1)
-      val fill = off.clone()
-      val nbrs = new Array[Int](plain.length * 2); val ws = new Array[Double](plain.length * 2)
-      plain.foreach { r =>
-        val a = idx(r.getLong(0)); val b = idx(r.getLong(1)); val w = r.getDouble(2)
-        nbrs(fill(a)) = b; ws(fill(a)) = w; fill(a) += 1
-        nbrs(fill(b)) = a; ws(fill(b)) = w; fill(b) += 1
-      }
+      val csr = lg.undirected(weighted = true)
+      val (off, nbrs, ws) = (csr.off, csr.nbr, csr.w)
       val membIdx = Array.tabulate(n)(identity)
       val nextIdx = new Array[Int](n)
       // label state as INDICES into vids (every label is a vertex id) with

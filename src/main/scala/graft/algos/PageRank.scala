@@ -1,6 +1,6 @@
 package graft.algos
 
-import graft.core.{CheckpointStore, LinkGraph, VertexSlots}
+import graft.core.{CheckpointStore, LinkGraph, LocalGraph}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -127,35 +127,13 @@ object PageRank {
     if (eDf.count() <= smallThreshold) {
       val spark = g.spark
       import spark.implicits._
-      val rows = eDf.collect()
-      val vids: Array[Long] = g.numVertices match {
-        case Some(n0) => Array.tabulate(n0.toInt)(_.toLong)
-        case None =>
-          val seen = new java.util.HashSet[Long]()
-          val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-          rows.foreach { r =>
-            val a = r.getLong(0); val b = r.getLong(1)
-            if (seen.add(a)) buf += a
-            if (seen.add(b)) buf += b
-          }
-          buf.toArray
-      }
-      val n = vids.length
-      require(n > 0, "empty graph")
       // with numVertices set, an endpoint outside 0..n-1 has no slot
-      val slot = new VertexSlots(vids)
+      val lg = LocalGraph.numbered(eDf.collect(), g.numVertices)
+      val (vids, n, src, dst, w) = (lg.ids, lg.n, lg.src, lg.dst, lg.weight)
+      require(n > 0, "empty graph")
       val outw = new Array[Double](n)
-      rows.foreach(r => outw(slot(r.getLong(0))) += r.getDouble(2))
-      val src = new Array[Int](rows.length)
-      val dst = new Array[Int](rows.length)
-      val p = new Array[Double](rows.length)
-      var i = 0
-      while (i < rows.length) {
-        val r = rows(i)
-        src(i) = slot(r.getLong(0)); dst(i) = slot(r.getLong(1))
-        p(i) = r.getDouble(2) / outw(src(i))
-        i += 1
-      }
+      for (i <- 0 until lg.m) outw(src(i)) += w(i)
+      val p = Array.tabulate(lg.m)(i => w(i) / outw(src(i)))
       // personalization: same math as GridBlocks — total over
       // the FULL reset frame (ids outside the vertex set contribute to the
       // normalizer only), missing vertices coalesce to 0
@@ -168,8 +146,8 @@ object PageRank {
           require(tot > 0.0, "reset vector must not be all zeros")
           val arr = new Array[Double](n)
           rRows.foreach { rr =>
-            if (slot.contains(rr.getLong(0)))
-              arr(slot(rr.getLong(0))) = rr.getDouble(1) / tot
+            if (lg.contains(rr.getLong(0)))
+              arr(lg.slot(rr.getLong(0))) = rr.getDouble(1) / tot
           }
           arr
       }
@@ -181,7 +159,7 @@ object PageRank {
       // the parity spec
       val hasOut = new Array[Boolean](n)
       var si = 0
-      while (si < rows.length) { hasOut(src(si)) = true; si += 1 }
+      while (si < lg.m) { hasOut(src(si)) = true; si += 1 }
       var hasDangling = false
       var hv = 0
       while (hv < n) { if (!hasOut(hv)) hasDangling = true; hv += 1 }
@@ -190,7 +168,7 @@ object PageRank {
       while (it < iters) {
         val msg = new Array[Double](n)
         var j = 0
-        while (j < rows.length) { msg(dst(j)) += p(j) * rank(src(j)); j += 1 }
+        while (j < lg.m) { msg(dst(j)) += p(j) * rank(src(j)); j += 1 }
         val danglingMass =
           if (!hasDangling) 0.0
           else {

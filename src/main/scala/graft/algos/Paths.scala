@@ -10,43 +10,20 @@ import org.apache.spark.sql.functions._
   * `subcomponent(v, mode)` (`graphobject.c:14003-14017`),
   * unweighted `shortest_paths` rows (`graphobject.c:13921`).
   *
-  * Frontier-join BFS: each round joins the current frontier against the
-  * adjacency view and anti-joins the visited set — O(diameter) supersteps,
-  * each a co-partitioned hash join; lineage cut per round.
+  * BFS is [[Distances.multiBfs]] from one origin: a collected-array sweep
+  * under its gate, else one frontier join per level with the visited set
+  * anti-joined and the lineage cut per round.
   */
 object Paths {
 
-  /** Minimal hop distance from `source` to every reachable vertex.
+  /** Minimal hop distance from `source` to every reachable vertex: a
+    * one-origin [[Distances.multiBfs]] (its gated kernel, else its layered
+    * frontier loop).
     * @return (id, dist) — unreachable vertices are absent.
     */
-  def bfs(g: LinkGraph, source: Long, mode: Mode = Mode.Out): DataFrame = {
-    val adj = (mode match {
-      case Mode.Out => g.weighted
-      case Mode.In  => g.weighted.select(col("dst").as("src"), col("src").as("dst"))
-      case Mode.All => g.bidirected
-    }).select(col("src"), col("dst")).distinct().repartition(col("src")).persist()
-
-    val spark = g.spark
-    var visited = spark.range(1).select(lit(source).as("id"), lit(0L).as("dist")).transform(graft.core.Lineage.cut)
-    var frontier = visited
-    var d = 0L
-    var growing = true
-    while (growing) {
-      d += 1
-      val next = frontier.join(adj, frontier("id") === adj("src"))
-        .select(col("dst").as("id")).distinct()
-        .join(visited.select("id"), Seq("id"), "left_anti")
-        .select(col("id"), lit(d).as("dist"))
-        .transform(graft.core.Lineage.cut)
-      if (next.isEmpty) growing = false
-      else {
-        visited = visited.union(next).transform(graft.core.Lineage.cut)
-        frontier = next
-      }
-    }
-    adj.unpersist()
-    visited
-  }
+  def bfs(g: LinkGraph, source: Long, mode: Mode = Mode.Out): DataFrame =
+    Distances.multiBfs(g, mode, Some(g.spark.range(1).select(lit(source).as("id"))))
+      .select(col("v").as("id"), col("dist"))
 
   /** Vertices reachable from v (mode=Out), reaching v (In), or in the same
     * weak component (All) — the reference's `subcomponent`.

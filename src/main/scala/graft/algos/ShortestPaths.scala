@@ -128,25 +128,12 @@ object ShortestPaths {
       if (rows.nonEmpty)
         require(rows.map(_.getDouble(2)).min >= 0.0,
           s"negative edge weights not supported (min = ${rows.map(_.getDouble(2)).min})")
-      val idx = new java.util.HashMap[Long, Int]()
-      val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-      def intern(x: Long): Int =
-        if (idx.containsKey(x)) idx.get(x)
-        else { idx.put(x, ids.length); ids += x; ids.length - 1 }
-      intern(source)
-      rows.foreach { r => intern(r.getLong(0)); intern(r.getLong(1)) }
-      val n = ids.length
-      val off = new Array[Int](n + 1)
-      rows.foreach(r => off(idx.get(r.getLong(0)) + 1) += 1)
-      for (i <- 1 to n) off(i) += off(i - 1)
-      val fill = off.clone()
-      val nbrs = new Array[Int](rows.length); val ws = new Array[Double](rows.length)
-      rows.foreach { r =>
-        val i = idx.get(r.getLong(0))
-        nbrs(fill(i)) = idx.get(r.getLong(1)); ws(fill(i)) = r.getDouble(2); fill(i) += 1
-      }
+      val lg = graft.core.LocalGraph(rows, first = Array(source))
+      val (ids, n) = (lg.ids, lg.n)
+      val csr = lg.out(weighted = true)
+      val (off, nbrs, ws) = (csr.off, csr.nbr, csr.w)
       val d = Array.fill(n)(Double.PositiveInfinity)
-      val s0 = idx.get(source); d(s0) = 0.0
+      val s0 = lg.slot(source); d(s0) = 0.0
       val pq = new java.util.PriorityQueue[(Double, Int)](
         (a: (Double, Int), b: (Double, Int)) => java.lang.Double.compare(a._1, b._1))
       pq.add((0.0, s0))
@@ -164,8 +151,8 @@ object ShortestPaths {
       // parent DAG: u -> v on a shortest path iff d(u) + w = d(v)
       // (identical relative epsilon to the distributed formulation)
       val pmap = new java.util.HashMap[Int, scala.collection.mutable.ArrayBuffer[Int]]()
-      rows.foreach { r =>
-        val u = idx.get(r.getLong(0)); val v = idx.get(r.getLong(1)); val w = r.getDouble(2)
+      for (i <- 0 until lg.m) {
+        val u = lg.src(i); val v = lg.dst(i); val w = lg.weight(i)
         if (d(u) < Double.PositiveInfinity && d(v) < Double.PositiveInfinity &&
             math.abs(d(u) + w - d(v)) <= 1e-9 * math.max(math.abs(d(v)), 1.0)) {
           val buf = pmap.computeIfAbsent(v, _ => scala.collection.mutable.ArrayBuffer.empty[Int])
@@ -173,13 +160,13 @@ object ShortestPaths {
         }
       }
       val reach = targets.distinct
-        .filter(t => idx.containsKey(t) && d(idx.get(t)) < Double.PositiveInfinity)
+        .filter(t => lg.contains(t) && d(lg.slot(t)) < Double.PositiveInfinity)
       val results = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Long])]
       var produced = 0L
       val capDepth = g.vcount() + 1
       // explicit stack: (target, head, path-so-far); List prepend shares tails
       val stack = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, List[Long])]
-      reach.foreach(t => stack += ((t, idx.get(t), List(t))))
+      reach.foreach(t => stack += ((t, lg.slot(t), List(t))))
       while (stack.nonEmpty) {
         val (t, head, path) = stack.remove(stack.length - 1)
         if (head == s0) results += ((t, path))

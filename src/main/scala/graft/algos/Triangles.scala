@@ -1,7 +1,7 @@
 package graft.algos
 
-import graft.core.{GraphOps, LinkGraph}
-import org.apache.spark.sql.DataFrame
+import graft.core.{GraphOps, LinkGraph, LocalGraph}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.functions.{count => cnt}
 
@@ -40,44 +40,31 @@ object Triangles {
     * adjacency aggregate cut, intersect join). Orientation and intersection
     * replicate the distributed math one-for-one: orient low (deg, id) ->
     * high, triangles = common out-neighbors per oriented edge. Returns
-    * per-vertex counts over the edge-endpoint vertex set; callers attach
+    * (ids, per-vertex counts) over the edge-endpoint vertex set; callers attach
     * isolated vertices exactly as they do for the distributed path.
     */
-  private def kernelCounts(edges: Array[(Long, Long)]): java.util.HashMap[Long, Long] = {
-    val seen = new java.util.HashSet[Long]()
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-    edges.foreach { case (a, b) =>
-      if (seen.add(a)) buf += a
-      if (seen.add(b)) buf += b
-    }
-    val vids = buf.toArray
-    val n = vids.length
-    val idx = new java.util.HashMap[Long, Int](n * 2)
-    vids.zipWithIndex.foreach { case (id, i) => idx.put(id, i) }
+  private def kernelCounts(edges: Array[Row]): (Array[Long], Array[Long]) = {
+    val lg = LocalGraph(edges)
+    val (vids, n, m) = (lg.ids, lg.n, lg.m)
     val deg = new Array[Int](n)
-    edges.foreach { case (a, b) => deg(idx.get(a)) += 1; deg(idx.get(b)) += 1 }
+    for (i <- 0 until m) { deg(lg.src(i)) += 1; deg(lg.dst(i)) += 1 }
     // orient low (deg, id) -> high (deg, id); CSR of out-neighbors
-    val lo = new Array[Int](edges.length); val hi = new Array[Int](edges.length)
+    val lo = new Array[Int](m); val hi = new Array[Int](m)
     var i = 0
-    while (i < edges.length) {
-      val a = idx.get(edges(i)._1); val b = idx.get(edges(i)._2)
-      val aFirst = deg(a) < deg(b) || (deg(a) == deg(b) && edges(i)._1 < edges(i)._2)
+    while (i < m) {
+      val a = lg.src(i); val b = lg.dst(i)
+      val aFirst = deg(a) < deg(b) || (deg(a) == deg(b) && vids(a) < vids(b))
       lo(i) = if (aFirst) a else b
       hi(i) = if (aFirst) b else a
       i += 1
     }
-    val off = new Array[Int](n + 1)
-    i = 0; while (i < edges.length) { off(lo(i) + 1) += 1; i += 1 }
-    i = 1; while (i <= n) { off(i) += off(i - 1); i += 1 }
-    val fill = off.clone()
-    val nbr = new Array[Int](edges.length)
-    i = 0
-    while (i < edges.length) { nbr(fill(lo(i))) = hi(i); fill(lo(i)) += 1; i += 1 }
+    val csr = LocalGraph.csr(n, lo, hi)
+    val (off, nbr) = (csr.off, csr.nbr)
     i = 0
     while (i < n) { java.util.Arrays.sort(nbr, off(i), off(i + 1)); i += 1 }
     val tri = new Array[Long](n)
     i = 0
-    while (i < edges.length) {
+    while (i < m) {
       val u = lo(i); val v = hi(i)
       var p = off(u); var q = off(v)
       while (p < off(u + 1) && q < off(v + 1)) {
@@ -88,10 +75,7 @@ object Triangles {
       }
       i += 1
     }
-    val out = new java.util.HashMap[Long, Long](n * 2)
-    i = 0
-    while (i < n) { out.put(vids(i), tri(i)); i += 1 }
-    out
+    (vids, tri)
   }
 
   /** Canonical simple edges, cut once; Left(collected rows) under the gate,
@@ -99,10 +83,9 @@ object Triangles {
     * same materialization instead of cutting twice.
     */
   private def collectedSimple(g: LinkGraph, smallThreshold: Long)
-      : Either[Array[(Long, Long)], DataFrame] = {
+      : Either[Array[Row], DataFrame] = {
     val e = preparedEdges(g)
-    if (e.count() > smallThreshold) Right(e)
-    else Left(e.collect().map(r => (r.getLong(0), r.getLong(1))))
+    if (e.count() > smallThreshold) Right(e) else Left(e.collect())
   }
 
   /** Canonical simple edges, materialized exactly once (a canonical-simple
@@ -155,10 +138,7 @@ object Triangles {
   /** Global triangle count (= `cliques(3,3)` size, `graphobject.c:15738`). */
   def count(g: LinkGraph, smallThreshold: Long = 8000000L): Long =
     collectedSimple(g, smallThreshold) match {
-      case Left(edges) =>
-        var t = 0L
-        kernelCounts(edges).values().forEach(v => t += v)
-        t / 3
+      case Left(edges) => kernelCounts(edges)._2.sum / 3
       case Right(e) => triplesFrom(e).count()
     }
 
@@ -171,10 +151,8 @@ object Triangles {
         // the distributed path's left join
         val spark = g.spark
         import spark.implicits._
-        val km = kernelCounts(edges)
-        val seq = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-        km.forEach((k, v) => seq += ((k, v)))
-        spark.createDataset(spark.sparkContext.parallelize(seq.toSeq,
+        val (vids, tri) = kernelCounts(edges)
+        spark.createDataset(spark.sparkContext.parallelize(vids.toSeq.zip(tri),
           spark.sparkContext.defaultParallelism)).toDF("id", "triangles")
       case Right(e) =>
         val t = triplesFrom(e)

@@ -1,0 +1,124 @@
+package graft.core
+
+import org.apache.spark.sql.Row
+
+/** The collected graph every gated driver kernel runs on: an `Array[Row]`
+  * of `(src, dst[, weight])` numbered into int slots once, with CSR views
+  * built by one builder.
+  *
+  * `ids(i)` owns slot `i`. The numbering is the caller's choice (see the
+  * companion): the range `0..n-1` when a graph declares `numVertices`, else
+  * first-seen over each row's `(src, dst)`, optionally after an explicit id
+  * array. `src`, `dst` and `weight` keep row order, and every CSR view is
+  * filled in that order, so a kernel's neighbour order — and with it its
+  * floating-point summation order and tie-breaks — follows the collected
+  * rows exactly. Looking up an id that has no slot fails with a `require`
+  * naming the id and n, so an endpoint outside a graph's `numVertices`
+  * range cannot land silently on slot 0.
+  */
+final class LocalGraph private (val ids: Array[Long],
+                                index: java.util.HashMap[Long, Int], // null: ids are 0..n-1
+                                rows: Array[Row]) {
+  val n: Int = ids.length
+  val m: Int = rows.length
+
+  /** Slot of `id`, or -1 when it has none. */
+  private def indexOf(id: Long): Int =
+    if (index != null) index.getOrDefault(id, -1)
+    else if (id >= 0 && id < n) id.toInt
+    else -1
+
+  def contains(id: Long): Boolean = indexOf(id) >= 0
+
+  def slot(id: Long): Int = {
+    val s = indexOf(id)
+    require(s >= 0, s"edge endpoint $id is outside the vertex ids 0..${n - 1} (n = $n)")
+    s
+  }
+
+  val src: Array[Int] = new Array[Int](m)
+  val dst: Array[Int] = new Array[Int](m)
+  locally {
+    var i = 0
+    while (i < m) { src(i) = slot(rows(i).getLong(0)); dst(i) = slot(rows(i).getLong(1)); i += 1 }
+  }
+
+  /** Row-order weights (column 2); only rows that carry one may ask. */
+  lazy val weight: Array[Double] = rows.map(_.getDouble(2))
+
+  /** Out-adjacency: row i is the arc `src(i) -> dst(i)`. */
+  def out(weighted: Boolean = false): LocalGraph.Csr =
+    LocalGraph.csr(n, src, dst, if (weighted) weight else null)
+
+  /** Both directions of every non-loop row: row i adds `src(i) -> dst(i)`,
+    * then `dst(i) -> src(i)`.
+    */
+  def undirected(weighted: Boolean = false): LocalGraph.Csr = {
+    var arcs = 0
+    for (i <- 0 until m) if (src(i) != dst(i)) arcs += 2
+    val from = new Array[Int](arcs)
+    val to = new Array[Int](arcs)
+    val w = if (weighted) new Array[Double](arcs) else null
+    var i = 0
+    var k = 0
+    while (i < m) {
+      if (src(i) != dst(i)) {
+        from(k) = src(i); to(k) = dst(i); from(k + 1) = dst(i); to(k + 1) = src(i)
+        if (weighted) { w(k) = weight(i); w(k + 1) = weight(i) }
+        k += 2
+      }
+      i += 1
+    }
+    LocalGraph.csr(n, from, to, w)
+  }
+}
+
+object LocalGraph {
+
+  /** Compressed rows: the neighbours of slot `v` are `nbr(off(v)) until
+    * nbr(off(v + 1))`, with weights `w` at the same positions (null when
+    * built without them).
+    */
+  final class Csr(val off: Array[Int], val nbr: Array[Int], val w: Array[Double])
+
+  /** CSR of the arcs `from(k) -> to(k)` over `n` slots, filled in index order. */
+  def csr(n: Int, from: Array[Int], to: Array[Int], w: Array[Double] = null): Csr = {
+    val off = new Array[Int](n + 1)
+    from.foreach(f => off(f + 1) += 1)
+    for (i <- 1 to n) off(i) += off(i - 1)
+    val fill = off.clone()
+    val nbr = new Array[Int](from.length)
+    val ws = if (w == null) null else new Array[Double](from.length)
+    var k = 0
+    while (k < from.length) {
+      val f = from(k)
+      nbr(fill(f)) = to(k)
+      if (ws != null) ws(fill(f)) = w(k)
+      fill(f) += 1; k += 1
+    }
+    new Csr(off, nbr, ws)
+  }
+
+  /** Ids `first` in order, then every other endpoint in first-seen order
+    * over each row's `(src, dst)`.
+    */
+  def apply(rows: Array[Row], first: Array[Long] = Array.emptyLongArray): LocalGraph = {
+    val index = new java.util.HashMap[Long, Int]()
+    val ids = scala.collection.mutable.ArrayBuilder.make[Long]
+    var n = 0
+    def intern(x: Long): Unit =
+      if (!index.containsKey(x)) { index.put(x, n); ids += x; n += 1 }
+    first.foreach(intern)
+    rows.foreach { r => intern(r.getLong(0)); intern(r.getLong(1)) }
+    new LocalGraph(ids.result(), index, rows)
+  }
+
+  /** The numbering of a graph's kernels: ids `0..n-1` when `numVertices`
+    * is set (an endpoint outside them fails the slot `require`), else
+    * first-seen over the rows.
+    */
+  def numbered(rows: Array[Row], numVertices: Option[Long]): LocalGraph = numVertices match {
+    case Some(n) => new LocalGraph(Array.tabulate(n.toInt)(_.toLong), null, rows)
+    case None    => apply(rows)
+  }
+}
