@@ -292,62 +292,92 @@ object Betweenness {
   /** Closeness centrality (id, closeness): reachable/Σdist over vertices at
     * finite (≤ cutoff) distance — igraph's disconnected-graph convention
     * (per-vertex underestimate, `graphobject.c:13177-13208`). Vertices that
-    * reach nothing get NaN (igraph returns NaN there too).
+    * reach nothing get NaN (igraph returns NaN there too). `mode` governs
+    * distance direction (Out = distances from v along edges); undirected
+    * graphs use All.
+    *
+    * Under the [[Distances.distanceSums]] gate this is a projection of its
+    * per-vertex fold, a local n-row frame from one collect; above it, one
+    * aggregate over the distributed [[distanceTable]] (pinned against the
+    * fold by the `smallThreshold = 0` spec).
     */
   def closeness(
       g: LinkGraph,
       weighted: Boolean = false,
       cutoff: Option[Double] = None,
-      mode: Mode = Mode.All
+      mode: Mode = Mode.All,
+      smallThreshold: Long = 8000000L
   ): DataFrame = {
-    // mode governs distance direction: Out = distances from v along edges
-    val dist = distanceTable(g, weighted, cutoff, mode)
-    val agg = dist.where(col("dist") > 0)
-      .groupBy(col("origin").as("id"))
-      .agg(count(lit(1)).cast("double").as("reached"), sum("dist").as("sumd"))
-    g.vertices.join(agg, Seq("id"), "left")
-      .select(col("id"),
-        when(col("reached").isNull, lit(Double.NaN))
-          .otherwise(col("reached") / col("sumd")).as("closeness"))
+    val effMode = if (!g.directed) Mode.All else mode
+    Distances.distanceSums(g, effMode, weighted, cutoff, smallThreshold) match {
+      case Some(sums) =>
+        val spark = g.spark
+        import spark.implicits._
+        sums.toSeq.map(s => (s.id, if (s.reached == 0) Double.NaN else s.reached / s.sumDist))
+          .toDF("id", "closeness")
+      case None =>
+        val agg = distanceTable(g, weighted, cutoff, effMode, g.vcount()).where(col("dist") > 0)
+          .groupBy(col("origin").as("id"))
+          .agg(count(lit(1)).cast("double").as("reached"), sum("dist").as("sumd"))
+        g.vertices.join(agg, Seq("id"), "left")
+          .select(col("id"),
+            when(col("reached").isNull, lit(Double.NaN))
+              .otherwise(col("reached") / col("sumd")).as("closeness"))
+    }
   }
 
   /** `harmonic_centrality` (`graphobject.c:4274-4300`; goldens
     * `test_structural.py:358-387`): mean of 1/d(v, u) over all other
-    * vertices (unreachable contribute 0), same distance machinery as
-    * [[closeness]] — one aggregate over the multi-source distance table.
+    * vertices (unreachable contribute 0). Same two paths as [[closeness]]:
+    * a projection of the [[Distances.distanceSums]] fold under its gate,
+    * else one aggregate over the distributed [[distanceTable]].
     */
   def harmonicCentrality(
       g: LinkGraph,
       weighted: Boolean = false,
       cutoff: Option[Double] = None,
-      mode: Mode = Mode.All
+      mode: Mode = Mode.All,
+      smallThreshold: Long = 8000000L
   ): DataFrame = {
-    val n = g.vcount()
-    val dist = distanceTable(g, weighted, cutoff, mode)
-    val agg = dist.where(col("dist") > 0)
-      .groupBy(col("origin").as("id"))
-      .agg(sum(lit(1.0) / col("dist")).as("s"))
-    g.vertices.join(agg, Seq("id"), "left")
-      .select(col("id"),
-        (coalesce(col("s"), lit(0.0)) / lit(math.max(1L, n - 1).toDouble)).as("harmonic"))
+    val effMode = if (!g.directed) Mode.All else mode
+    Distances.distanceSums(g, effMode, weighted, cutoff, smallThreshold) match {
+      case Some(sums) =>
+        val spark = g.spark
+        import spark.implicits._
+        val norm = math.max(1L, sums.length - 1L).toDouble
+        sums.toSeq.map(s => (s.id, s.sumInvDist / norm)).toDF("id", "harmonic")
+      case None =>
+        val n = g.vcount()
+        val agg = distanceTable(g, weighted, cutoff, effMode, n).where(col("dist") > 0)
+          .groupBy(col("origin").as("id"))
+          .agg(sum(lit(1.0) / col("dist")).as("s"))
+        g.vertices.join(agg, Seq("id"), "left")
+          .select(col("id"),
+            (coalesce(col("s"), lit(0.0)) / lit(math.max(1L, n - 1).toDouble)).as("harmonic"))
+    }
   }
 
-  /** Multi-source distance table for the distance-only centralities
-    * (closeness / harmonic): these need NO predecessor DAG or σ/δ sweep,
-    * so they route to [[Distances.multiBfs]] (unweighted — integer-level
-    * BFS with the gated driver kernel) / [[Distances.multiDistancesWeighted]]
-    * (weighted relax) instead of the full [[brandesTables]] machinery,
-    * which builds the O(n·m) shortest-path DAG they would never read.
-    * `cutoff` as a post-filter is equivalent to pruning during the sweep:
-    * every prefix of a ≤-cutoff shortest path is itself ≤ cutoff.
+  /** The distributed multi-source distance table (origin, v, dist: double)
+    * from all `n` vertices for closeness / harmonic above the
+    * [[Distances.distanceSums]] gate: the layered BFS of
+    * [[Distances.multiBfs]] (unweighted) or the relax loop of
+    * [[Distances.multiDistancesWeighted]] (weighted), not the full
+    * [[brandesTables]] machinery, which builds the O(n·m) shortest-path DAG
+    * these never read. `cutoff` as a post-filter is equivalent to pruning
+    * during the sweep: every prefix of a ≤-cutoff shortest path is itself
+    * ≤ cutoff.
     */
-  private def distanceTable(g: LinkGraph, weighted: Boolean,
-                            cutoff: Option[Double], mode: Mode): DataFrame = {
-    val effMode = if (!g.directed) Mode.All else mode
+  private def distanceTable(g: LinkGraph, weighted: Boolean, cutoff: Option[Double],
+                            mode: Mode, n: Long): DataFrame = {
     val d =
-      if (weighted) Distances.multiDistancesWeighted(g, effMode)
-      else Distances.multiBfs(g, effMode)
-        .select(col("origin"), col("v"), col("dist").cast("double").as("dist"))
+      if (weighted) {
+        Distances.guardAllOrigins(n, "exact weighted distance sweep")
+        Distances.relaxLoop(g, mode, g.vertices)
+      } else {
+        Distances.guardAllOrigins(n, "exact BFS")
+        Distances.bfsLoop(g, mode, g.vertices)
+          .select(col("origin"), col("v"), col("dist").cast("double").as("dist"))
+      }
     cutoff.map(c => d.where(col("dist") <= c)).getOrElse(d)
   }
 }

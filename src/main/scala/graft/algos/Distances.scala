@@ -15,6 +15,10 @@ import org.apache.spark.sql.functions._
   * O(n·reach) state: right for the golden graphs and for bounded vertex
   * subsets; at web scale the documented substitute is HyperBall-style
   * `approx_count_distinct` neighborhood functions ([[neighborhoodFunction]]).
+  *
+  * On small graphs one gate ([[kernelInput]]) sends the exact sweeps to
+  * driver kernels instead: [[multiBfs]] / [[multiDistancesWeighted]] emit
+  * the table, [[distanceSums]] folds each origin's sweep into one row.
   */
 object Distances {
 
@@ -31,82 +35,151 @@ object Distances {
     */
   val maxExactOrigins = 200000L
 
-  private def guardAllOrigins(g: LinkGraph, what: String): Unit = {
-    val n = g.vcount()
+  private[algos] def guardAllOrigins(n: Long, what: String): Unit =
     require(n <= maxExactOrigins,
       s"$what from ALL origins is O(n·m) — capped at $maxExactOrigins origins ($n vertices). " +
         "Pass a bounded source set (multiBfs/multiDistancesWeighted `sources`, girth `maxOrigins`) " +
         "or use the HyperBall approximations (neighborhoodFunction/eccentricityApprox/pathLengthHistApprox) at scale")
+
+  /** Most (origin, vertex) pairs a gated distance kernel sweeps: every
+    * origin can reach at most every vertex, so this bounds its output
+    * table and its work.
+    */
+  private val maxKernelPairs = 4000000L
+
+  /** The input of the gated distance kernels, or None above the gate. One
+    * bounded collect of the edge rows (more than `smallThreshold` of them
+    * fails the gate), numbered first-seen over every row, self-loops
+    * included; the origins are `sources` (one more collect) or every
+    * vertex; and origins × numbered vertices is at most [[maxKernelPairs]].
+    * A declared vertex count above that bound skips the collect. Weighted
+    * input must have strictly positive weights on its non-loop rows.
+    */
+  private def kernelInput(g: LinkGraph, weighted: Boolean, sources: Option[DataFrame],
+                          smallThreshold: Long): Option[(LocalGraph, Array[Long])] = {
+    if (sources.isEmpty && g.numVertices.exists(_ > maxKernelPairs)) return None
+    val cols = if (weighted) Seq("src", "dst", "weight") else Seq("src", "dst")
+    val rows = g.weighted.select(cols.map(col): _*)
+      .limit(math.max(0L, math.min(smallThreshold, Int.MaxValue - 1L) + 1).toInt).collect()
+    if (rows.length > smallThreshold) return None
+    val lg = LocalGraph(rows)
+    val given = sources.map(_.select("id").collect().map(_.getLong(0)))
+    val nOrigins = given.fold(g.numVertices.getOrElse(lg.n.toLong))(_.length.toLong)
+    if (nOrigins > maxKernelPairs / math.max(lg.n, 1)) return None
+    if (weighted)
+      for (i <- 0 until lg.m if lg.src(i) != lg.dst(i))
+        require(lg.weight(i) > 0.0, "weighted distances need strictly positive weights")
+    Some((lg, given.getOrElse(g.numVertices.fold(lg.ids)(n => Array.tabulate(n.toInt)(_.toLong)))))
   }
+
+  /** Calls `visit(o, dist)` for each origin `o` in turn, `dist(i)` holding
+    * the distance from `o` to slot `i`: BFS hop counts when `csr` has no
+    * weights, else Dijkstra sums; +Inf where unreached or beyond `cutoff`,
+    * and everywhere when `o` has no slot. Every prefix of a shortest path
+    * within `cutoff` is within it too, so pruning at `cutoff` during the
+    * sweep keeps exactly the distances a post-filter would.
+    */
+  private def sweepAll(lg: LocalGraph, origins: Array[Long], csr: LocalGraph.Csr, cutoff: Double)
+                      (visit: (Long, Array[Double]) => Unit): Unit = {
+    val (off, nbr, w) = (csr.off, csr.nbr, csr.w)
+    val dist = new Array[Double](lg.n)
+    val queue = new Array[Int](lg.n)
+    origins.foreach { o =>
+      java.util.Arrays.fill(dist, Double.PositiveInfinity)
+      if (lg.contains(o)) {
+        val s = lg.slot(o)
+        dist(s) = 0.0
+        if (w == null) {
+          var head = 0; var tail = 0
+          queue(tail) = s; tail += 1
+          while (head < tail) {
+            val u = queue(head); head += 1
+            val nd = dist(u) + 1
+            if (nd <= cutoff) {
+              var j = off(u)
+              while (j < off(u + 1)) {
+                val v = nbr(j)
+                if (dist(v) == Double.PositiveInfinity) { dist(v) = nd; queue(tail) = v; tail += 1 }
+                j += 1
+              }
+            }
+          }
+        } else {
+          val pq = new java.util.PriorityQueue[(Double, Int)](
+            (a: (Double, Int), b: (Double, Int)) => java.lang.Double.compare(a._1, b._1))
+          pq.add((0.0, s))
+          while (!pq.isEmpty) {
+            val (du, u) = pq.poll()
+            if (du <= dist(u)) {
+              var j = off(u)
+              while (j < off(u + 1)) {
+                val v = nbr(j); val nd = du + w(j)
+                if (nd < dist(v) && nd <= cutoff) { dist(v) = nd; pq.add((nd, v)) }
+                j += 1
+              }
+            }
+          }
+        }
+      }
+      visit(o, dist)
+    }
+  }
+
+  /** The gated driver kernel of [[multiBfs]] and [[multiDistancesWeighted]]:
+    * (origin, v, dist: double) for every origin, itself at 0 included, or
+    * None above the [[kernelInput]] gate. The table goes out through
+    * `parallelize`, not a local relation: a multi-million-row LocalRelation
+    * gets embedded in (and re-broadcast through) every downstream plan —
+    * girth's self-joins over it measured 4x slower than the distributed
+    * loop.
+    */
+  private def tableKernel(g: LinkGraph, mode: Mode, sources: Option[DataFrame], weighted: Boolean,
+                          smallThreshold: Long): Option[DataFrame] =
+    kernelInput(g, weighted, sources, smallThreshold).map { case (lg, origins) =>
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
+      sweepAll(lg, origins, lg.arcs(mode, weighted), Double.PositiveInfinity) { (o, dist) =>
+        out += ((o, o, 0.0))
+        for (i <- 0 until lg.n if dist(i) > 0 && dist(i) < Double.PositiveInfinity)
+          out += ((o, lg.ids(i), dist(i)))
+      }
+      val spark = g.spark
+      import spark.implicits._
+      spark.createDataset(spark.sparkContext.parallelize(
+        out.toSeq, spark.sparkContext.defaultParallelism)).toDF("origin", "v", "dist")
+    }
 
   /** All-pairs (origin, v, dist) reachability table from every vertex in
     * `sources` (defaults to all vertices — guarded by [[maxExactOrigins]]).
     * Undirected uses mode=All.
+    *
+    * Under the [[kernelInput]] gate (at most `smallThreshold` edge rows, at
+    * most 4M origin × vertex pairs) one collect and a driver BFS per origin
+    * build the table; above it the layered distributed loop runs (pinned
+    * against the kernel by the `smallThreshold = 0` specs).
     */
   def multiBfs(g: LinkGraph, mode: Mode = Mode.All, sources: Option[DataFrame] = None,
                smallThreshold: Long = 8000000L): DataFrame = {
-    if (sources.isEmpty) guardAllOrigins(g, "exact BFS")
+    val what = "exact BFS"
+    if (sources.isEmpty) g.numVertices.foreach(guardAllOrigins(_, what))
+    tableKernel(g, mode, sources, weighted = false, smallThreshold)
+      .map(_.withColumn("dist", col("dist").cast("long")))
+      .getOrElse {
+        if (sources.isEmpty) guardAllOrigins(g.vcount(), what)
+        bfsLoop(g, mode, sources.getOrElse(g.vertices))
+      }
+  }
+
+  /** The layered distributed BFS of [[multiBfs]] from the `id`s of
+    * `sources`: (origin, v, dist: long).
+    */
+  private[algos] def bfsLoop(g: LinkGraph, mode: Mode, sources: DataFrame): DataFrame = {
     val adj = (mode match {
       case Mode.Out => g.weighted
       case Mode.In  => g.weighted.select(col("dst").as("src"), col("src").as("dst"))
       case Mode.All => g.bidirected
     }).select(col("src").as("v"), col("dst").as("nbr")).distinct()
       .repartition(col("v")).persist()
-    val nAdj = adj.count()
-    val src = sources.getOrElse(g.vertices).select(col("id").as("origin"))
-
-    // adaptive small-input fast path (the WCC/coreness posture: decided by
-    // runtime COUNTs). The exact sweep is only legal on bounded inputs
-    // anyway (guardAllOrigins / bounded `sources`); when the adjacency fits
-    // one task AND the output distance table is driver-sized, a collected
-    // CSR + per-origin array BFS replaces rounds × ~6 scheduled jobs with
-    // 3. Above either bound the layered distributed loop below runs
-    // unchanged (and is pinned by the smallThreshold=0 spec).
-    if (nAdj <= smallThreshold) {
-      val spark = g.spark
-      import spark.implicits._
-      val srcIds = src.collect().map(_.getLong(0))
-      val lg = LocalGraph(adj.collect())
-      val (ids, n) = (lg.ids, lg.n)
-      // output bound: every origin can reach at most n vertices
-      if (srcIds.length.toLong * math.max(n, 1).toLong <= 4000000L) {
-        val csr = lg.out()
-        val (off, nbrs) = (csr.off, csr.nbr)
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-        val dist = new Array[Int](n)
-        val queue = new Array[Int](n)
-        srcIds.foreach { o =>
-          out += ((o, o, 0L))
-          if (lg.contains(o)) {
-            java.util.Arrays.fill(dist, -1)
-            val s = lg.slot(o); dist(s) = 0
-            var head = 0; var tail = 0
-            queue(tail) = s; tail += 1
-            while (head < tail) {
-              val u = queue(head); head += 1
-              var j = off(u)
-              while (j < off(u + 1)) {
-                val w = nbrs(j)
-                if (dist(w) < 0) {
-                  dist(w) = dist(u) + 1
-                  out += ((o, ids(w), dist(w).toLong))
-                  queue(tail) = w; tail += 1
-                }
-                j += 1
-              }
-            }
-          }
-        }
-        adj.unpersist()
-        // parallelize, don't toDF: a multi-million-row LocalRelation gets
-        // embedded in (and re-broadcast through) every downstream plan —
-        // girth's self-joins over it measured 4x slower than the
-        // distributed loop it replaced
-        return spark.createDataset(spark.sparkContext.parallelize(
-          out.toSeq, spark.sparkContext.defaultParallelism))
-          .toDF("origin", "v", "dist")
-      }
-    }
+    val src = sources.select(col("id").as("origin"))
     // Layered accumulation: each BFS level is checkpointed ONCE and the
     // result is the lazy union of the level frames — the old loop re-cut
     // (re-materialized) the ENTIRE cumulative O(n·reach) table every round.
@@ -148,13 +221,29 @@ object Distances {
     * same frontier relax loop as [[Betweenness.brandesTables]] step 1
     * (`diameter(weights=...)`, `graphobject.c:13328`; golden
     * `test_structural.py:43-47`: weighted Tree(14,3) diameter 15). Requires
-    * strictly positive weights. One join + min-aggregate per relax round;
+    * strictly positive weights on non-loop edges; self-loops never shorten
+    * a path and are ignored. One join + min-aggregate per relax round;
     * rounds ≤ the max hop count of any weighted shortest path.
+    *
+    * Under the same gate as [[multiBfs]] a driver Dijkstra per origin builds
+    * the table; it adds each path's weights hop by hop like the relax loop,
+    * so the two paths give bit-identical distances.
     */
   def multiDistancesWeighted(g: LinkGraph, mode: Mode = Mode.All,
                              sources: Option[DataFrame] = None,
                              smallBfsThreshold: Long = 8000000L): DataFrame = {
-    if (sources.isEmpty) guardAllOrigins(g, "exact weighted distance sweep")
+    val what = "exact weighted distance sweep"
+    if (sources.isEmpty) g.numVertices.foreach(guardAllOrigins(_, what))
+    tableKernel(g, mode, sources, weighted = true, smallBfsThreshold).getOrElse {
+      if (sources.isEmpty) guardAllOrigins(g.vcount(), what)
+      relaxLoop(g, mode, sources.getOrElse(g.vertices))
+    }
+  }
+
+  /** The distributed relax loop of [[multiDistancesWeighted]] from the
+    * `id`s of `sources`: (origin, v, dist: double).
+    */
+  private[algos] def relaxLoop(g: LinkGraph, mode: Mode, sources: DataFrame): DataFrame = {
     val adjRaw = (mode match {
       case Mode.Out => g.weighted
       case Mode.In  => g.weighted.select(col("dst").as("src"), col("src").as("dst"), col("weight"))
@@ -163,60 +252,10 @@ object Distances {
     val adj = adjRaw.groupBy(col("src").as("v"), col("dst").as("nbr"))
       .agg(min("weight").as("w"))
       .repartition(col("v")).persist()
-    val nAdj = adj.count()
     val minW = adj.agg(min("w")).head
     require(minW.isNullAt(0) || minW.getDouble(0) > 0.0,
       "weighted distances need strictly positive weights")
-    val src = sources.getOrElse(g.vertices).select(col("id").as("origin"))
-
-    // gated driver Dijkstra — same posture and bounds as [[multiBfs]]'s
-    // kernel (adjacency fits one task, output table driver-sized); per-path
-    // distance accumulation order matches the relax loop's (hop by hop), so
-    // the values are bit-identical. Above either bound the distributed
-    // relax loop below runs unchanged.
-    if (nAdj <= smallBfsThreshold) {
-      val spark = g.spark
-      import spark.implicits._
-      val srcIds = src.collect().map(_.getLong(0))
-      val lg = LocalGraph(adj.collect())
-      val (ids, n) = (lg.ids, lg.n)
-      if (srcIds.length.toLong * math.max(n, 1).toLong <= 4000000L) {
-        val csr = lg.out(weighted = true)
-        val (off, nbrs, ws) = (csr.off, csr.nbr, csr.w)
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-        val dist = new Array[Double](n)
-        srcIds.foreach { o =>
-          out += ((o, o, 0.0))
-          if (lg.contains(o)) {
-            java.util.Arrays.fill(dist, Double.PositiveInfinity)
-            val s = lg.slot(o); dist(s) = 0.0
-            val pq = new java.util.PriorityQueue[(Double, Int)](
-              (a: (Double, Int), b: (Double, Int)) => java.lang.Double.compare(a._1, b._1))
-            pq.add((0.0, s))
-            while (!pq.isEmpty) {
-              val (du, u) = pq.poll()
-              if (du <= dist(u)) {
-                var j = off(u)
-                while (j < off(u + 1)) {
-                  val v = nbrs(j); val nd = du + ws(j)
-                  if (nd < dist(v)) { dist(v) = nd; pq.add((nd, v)) }
-                  j += 1
-                }
-              }
-            }
-            var i = 0
-            while (i < n) {
-              if (i != s && dist(i) < Double.PositiveInfinity) out += ((o, ids(i), dist(i)))
-              i += 1
-            }
-          }
-        }
-        adj.unpersist()
-        return spark.createDataset(spark.sparkContext.parallelize(
-          out.toSeq, spark.sparkContext.defaultParallelism))
-          .toDF("origin", "v", "dist")
-      }
-    }
+    val src = sources.select(col("id").as("origin"))
     var dist = src.select(col("origin"), col("origin").as("v"), lit(0.0).as("dist"))
       .transform(Lineage.cut)
     var frontier = dist
@@ -240,6 +279,36 @@ object Distances {
     adj.unpersist()
     dist
   }
+
+  /** One vertex's fold over its distances to the others: how many it
+    * reaches at finite distance (within the cutoff), their distance sum and
+    * their inverse-distance sum.
+    */
+  final case class DistanceSum(id: Long, reached: Long, sumDist: Double, sumInvDist: Double)
+
+  /** [[DistanceSum]] of every vertex of `g` (isolated ones included) along
+    * `mode`, or None above the [[kernelInput]] gate (at most
+    * `smallThreshold` edge rows, at most 4M vertex pairs). The per-origin
+    * sums are folded inside the driver BFS / Dijkstra, so no distance table
+    * is built: n rows out of one collect. Weighted distances need strictly
+    * positive weights on non-loop edges. Closeness and harmonic centrality
+    * are projections of this fold.
+    */
+  def distanceSums(g: LinkGraph, mode: Mode, weighted: Boolean = false,
+                   cutoff: Option[Double] = None,
+                   smallThreshold: Long = 8000000L): Option[Array[DistanceSum]] =
+    kernelInput(g, weighted, None, smallThreshold).map { case (lg, vertices) =>
+      val out = Array.newBuilder[DistanceSum]
+      sweepAll(lg, vertices, lg.arcs(mode, weighted), cutoff.getOrElse(Double.PositiveInfinity)) {
+        (o, dist) =>
+          var reached = 0L; var sum = 0.0; var inv = 0.0
+          dist.foreach { d =>
+            if (d > 0 && d < Double.PositiveInfinity) { reached += 1; sum += d; inv += 1.0 / d }
+          }
+          out += DistanceSum(o, reached, sum, inv)
+      }
+      out.result()
+    }
 
   /** Per-vertex eccentricity: max distance to any reachable vertex (within
     * the component). Directed graphs follow edge direction by default —

@@ -71,6 +71,17 @@ final class LocalGraph private (val ids: Array[Long],
     }
     LocalGraph.csr(n, from, to, w)
   }
+
+  /** The non-loop arcs of the `mode` view: Out is `src(i) -> dst(i)`, In the
+    * reverse, All both ([[undirected]]).
+    */
+  def arcs(mode: Mode, weighted: Boolean = false): LocalGraph.Csr = mode match {
+    case Mode.All => undirected(weighted)
+    case _ =>
+      val keep = (0 until m).filter(i => src(i) != dst(i)).toArray
+      val (from, to) = if (mode == Mode.Out) (src, dst) else (dst, src)
+      LocalGraph.csr(n, keep.map(from), keep.map(to), if (weighted) keep.map(weight) else null)
+  }
 }
 
 object LocalGraph {

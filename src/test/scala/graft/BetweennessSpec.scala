@@ -2,6 +2,7 @@ package graft
 
 import graft.algos.Betweenness
 import graft.core.{LinkGraph, Mode}
+import org.apache.spark.sql.functions.{col, lit, pmod}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Brandes betweenness / edge betweenness / closeness goldens ported from
@@ -140,6 +141,61 @@ class BetweennessSpec extends AnyFunSuite {
       assert(eGate.keySet == eDist.keySet)
       eGate.foreach { case (k, x) =>
         assert(math.abs(x - eDist(k)) < 1e-9, s"edge $k seed $seed: $x vs ${eDist(k)}") }
+    }
+  }
+
+  test("closeness/harmonic: the driver fold == the distributed distance table") {
+    // smallThreshold = 0 pins the DISTRIBUTED table + aggregate; 1e-9
+    // covers the different summation order of the weighted sums
+    val spark2 = spark
+    import spark2.implicits._
+    def withWeights(g: LinkGraph): LinkGraph = LinkGraph(g.edges.select(col("src"), col("dst"),
+      (lit(0.5) + pmod(col("src") * 31 + col("dst") * 17, lit(7L)) * 0.25).as("weight")),
+      g.directed, g.numVertices)
+    val gnmDir = graft.core.Generators.erdosRenyiGnm(spark, 20, 40, directed = true, seed = 3L)
+    val gnmUnd = graft.core.Generators.erdosRenyiGnm(spark, 20, 30, directed = false, seed = 4L)
+    // 4 has only a self-loop, 5 is isolated (declared n)
+    val isoLoop = LinkGraph(Seq((0L, 1L), (1L, 2L), (2L, 0L), (2L, 3L), (4L, 4L)).toDF("src", "dst"),
+      directed = true, Some(6L))
+    val sparse = LinkGraph(Seq((-7L, 1000000007L), (1000000007L, 42L), (42L, -7L), (42L, 1L << 40),
+      (-3L, -3L)).toDF("src", "dst"), directed = false, None)
+    val cases = for {
+      (name, g, cutoffs) <- Seq(("gnm directed", gnmDir, Seq(None, Some(2.0))),
+        ("gnm undirected", gnmUnd, Seq(None, Some(2.0))), ("isolated + loop", isoLoop, Seq(None)),
+        ("sparse ids", sparse, Seq(None, Some(2.0))))
+      mode <- if (g.directed) Seq(Mode.Out, Mode.In, Mode.All) else Seq(Mode.All)
+      cutoff <- cutoffs
+      weighted <- Seq(false, true)
+    } yield (s"$name $mode cutoff=$cutoff weighted=$weighted", if (weighted) withWeights(g) else g,
+      mode, cutoff, weighted)
+    def values(df: org.apache.spark.sql.DataFrame): Map[Long, Double] =
+      df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    for ((what, g, mode, cutoff, weighted) <- cases) {
+      val pairs = Seq(
+        values(Betweenness.closeness(g, weighted, cutoff, mode)) ->
+          values(Betweenness.closeness(g, weighted, cutoff, mode, smallThreshold = 0L)),
+        values(Betweenness.harmonicCentrality(g, weighted, cutoff, mode)) ->
+          values(Betweenness.harmonicCentrality(g, weighted, cutoff, mode, smallThreshold = 0L)))
+      for ((fold, dist) <- pairs) {
+        assert(fold.keySet == dist.keySet, what)
+        fold.foreach { case (id, x) =>
+          val y = dist(id)
+          assert((x.isNaN && y.isNaN) || math.abs(x - y) < 1e-9, s"$what vertex $id: $x vs $y")
+        }
+      }
+    }
+  }
+
+  test("closeness/harmonic under the gate: one Spark job per collect") {
+    val literal = LinkGraph(spark, 10, Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 0L), (3L, 4L),
+      (5L, 6L), (6L, 7L), (8L, 8L)), directed = false)
+    val onePartition = LinkGraph(spark.range(0, 9, 1, 1)
+      .select(col("id").as("src"), (col("id") + 1).as("dst")), directed = true, Some(10L))
+    for (g <- Seq(literal, onePartition); weighted <- Seq(false, true)) {
+      val (_, cj) = JobCounter(spark)(Betweenness.closeness(g, weighted = weighted).collect())
+      val (_, hj) = JobCounter(spark)(Betweenness.harmonicCentrality(g, weighted = weighted).collect())
+      info(s"directed=${g.directed} weighted=$weighted: closeness ${cj.size} jobs, harmonic ${hj.size}")
+      assert(cj.size <= 1 && hj.size <= 1)
     }
   }
 }

@@ -295,6 +295,31 @@ class DistancesSpec extends AnyFunSuite {
     }
   }
 
+  test("multiBfs / multiDistancesWeighted: kernel and distributed tables hold the same rows") {
+    // smallThreshold = 0 pins the DISTRIBUTED loops; compared as multisets,
+    // with explicit sources (one absent from the graph), an isolated vertex,
+    // a vertex whose only edge is a (negative-weight, ignored) self-loop and
+    // sparse negative ids
+    val spark2 = spark
+    import spark2.implicits._
+    val isoLoop = LinkGraph(Seq((0L, 1L, 1.5), (1L, 2L, 0.25), (2L, 0L, 2.0), (2L, 3L, 1.0), (4L, 4L, -1.0))
+      .toDF("src", "dst", "weight"), directed = true, Some(6L))
+    val sparse = LinkGraph(Seq((-7L, 1000000007L, 0.5), (1000000007L, 42L, 1.25), (42L, -7L, 3.0),
+      (42L, 1L << 40, 0.75), (-3L, -3L, 1.0)).toDF("src", "dst", "weight"), directed = false, None)
+    for ((g, srcIds) <- Seq(isoLoop -> Seq(0L, 4L, 5L, 99L), sparse -> Seq(42L, -3L, 5L));
+         sources <- Seq(None, Some(srcIds.toDF("id")));
+         mode <- Seq(Mode.Out, Mode.In, Mode.All)) {
+      val what = s"directed=${g.directed} mode=$mode sources=${sources.map(_ => srcIds)}"
+      def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double)] =
+        df.collect().map(r => (r.getLong(0), r.getLong(1), r.get(2).asInstanceOf[Number].doubleValue))
+          .toSeq.sorted
+      assert(rows(Distances.multiBfs(g, mode, sources)) ==
+        rows(Distances.multiBfs(g, mode, sources, smallThreshold = 0L)), s"BFS $what")
+      assert(rows(Distances.multiDistancesWeighted(g, mode, sources)) ==
+        rows(Distances.multiDistancesWeighted(g, mode, sources, smallBfsThreshold = 0L)), s"weighted $what")
+    }
+  }
+
   test("topologicalLayers: distributed peel == gated driver Kahn; both reject cycles") {
     val spark2 = spark
     import spark2.implicits._

@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.LocalGraph
+import graft.core.{LocalGraph, Mode}
 import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -46,6 +46,15 @@ class LocalGraphSpec extends AnyFunSuite {
     assert(und.nbr.toSeq == Seq(2, 1, 1, 2, 0, 0, 0, 0))
     assert(und.w.toSeq == Seq(1.0, 2.0, 3.0, 5.0, 2.0, 3.0, 1.0, 5.0))
     assert(lg.undirected().nbr.toSeq == und.nbr.toSeq && lg.undirected().w == null)
+
+    // mode views of the distance kernels: non-loop rows, Out as stored, In reversed
+    val outArcs = lg.arcs(Mode.Out, weighted = true)
+    assert(outArcs.off.toSeq == Seq(0, 3, 4, 4))
+    assert(outArcs.nbr.toSeq == Seq(2, 1, 2, 0) && outArcs.w.toSeq == Seq(1.0, 3.0, 5.0, 2.0))
+    val inArcs = lg.arcs(Mode.In, weighted = true)
+    assert(inArcs.off.toSeq == Seq(0, 1, 2, 4))
+    assert(inArcs.nbr.toSeq == Seq(1, 0, 0, 0) && inArcs.w.toSeq == Seq(2.0, 3.0, 1.0, 5.0))
+    assert(lg.arcs(Mode.All).nbr.toSeq == und.nbr.toSeq && lg.arcs(Mode.In).w == null)
   }
 
   test("oriented build: the generic CSR over caller-chosen (from, to) arcs") {
