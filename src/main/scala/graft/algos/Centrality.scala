@@ -44,7 +44,7 @@ object Centrality {
       if (eDf.count() <= smallThreshold) {
         val spark = g.spark
         import spark.implicits._
-        val lg = LocalGraph.numbered(eDf.collect(), g.numVertices)
+        val lg = LocalGraph.collect(eDf, g.numVertices)
         val (vids, n, src, dst, w) = (lg.ids, lg.n, lg.src, lg.dst, lg.weight)
         var x = Array.fill(n)(1.0 / math.sqrt(n.toDouble))
         var lambda = 0.0
@@ -135,7 +135,7 @@ object Centrality {
       if (eDf.count() <= smallThreshold) {
         val spark = g.spark
         import spark.implicits._
-        val lg = LocalGraph.numbered(eDf.collect(), g.numVertices)
+        val lg = LocalGraph.collect(eDf, g.numVertices)
         val (vids, n, src, dst, w) = (lg.ids, lg.n, lg.src, lg.dst, lg.weight)
         var hub = Array.fill(n)(1.0 / math.sqrt(n.toDouble))
         var auth = hub.clone()

@@ -53,7 +53,7 @@ object KCore {
       import spark.implicits._
       // the pairs are symmetric, so every vertex is a src and its out-degree
       // in the CSR of the collected pairs is its degree
-      val lg = graft.core.LocalGraph(adj.collect())
+      val lg = graft.core.LocalGraph.collect(adj, None)
       adj.unpersist()
       val (ids, n) = (lg.ids, lg.n)
       val csr = lg.out()

@@ -67,7 +67,7 @@ object LabelProp {
       if (eDf.count() <= smallThreshold) {
         val spark = g.spark
         import spark.implicits._
-        val lg = graft.core.LocalGraph.numbered(eDf.collect(), g.numVertices)
+        val lg = graft.core.LocalGraph.collect(eDf, g.numVertices)
         val (vids, n) = (lg.ids, lg.n)
         // non-loop arcs as parallel arrays (bidirected already carries both
         // directions; vote flows src -> dst)

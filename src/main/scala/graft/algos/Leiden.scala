@@ -377,7 +377,7 @@ object Leiden {
       // endpoint union - one more scheduled job the kernel doesn't need;
       // WCC small-path precedent). Kernel output does not depend on vids
       // order: sweeps are synchronous over the previous membership.
-      val lg = graft.core.LocalGraph.numbered(e.select("src", "dst", "weight").collect(), g.numVertices)
+      val lg = graft.core.LocalGraph.collect(e.select("src", "dst", "weight"), g.numVertices)
       e.unpersist()
       val (vids, n) = (lg.ids, lg.n)
       val nwMap = new java.util.HashMap[Long, Double]()

@@ -61,7 +61,7 @@ object Louvain {
       // endpoint union - one more scheduled job the kernel doesn't need;
       // WCC small-path precedent). Kernel output does not depend on vids
       // order: sweeps are synchronous over the previous membership.
-      val lg = graft.core.LocalGraph.numbered(e.select("src", "dst", "weight").collect(), g.numVertices)
+      val lg = graft.core.LocalGraph.collect(e.select("src", "dst", "weight"), g.numVertices)
       e.unpersist()
       val (vids, n) = (lg.ids, lg.n)
       // total weight from the collected rows (saves the pre-gate aggregate

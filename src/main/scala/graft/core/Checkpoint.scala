@@ -36,13 +36,16 @@ import org.apache.spark.sql.types.StructType
   *     commits `_SUCCESS`; `partition` is the part file's index and `rows`
   *     comes from its parquet footer. It starts no Spark job beyond the
   *     write, and the re-read carries the state's schema (no inference job).
-  *   - task-written snapshots (PageRank's GridBlocks supersteps): the driver
-  *     empties `iter=K` with [[clear]], each task of the superstep writes its
-  *     block's `(id, rank)` rows with [[CheckpointStore.writePart]] to
-  *     `part-<block>.parquet` (a retried task overwrites its own file), and
-  *     after the superstep's action [[commit]] writes the metrics file from
-  *     the row counts the writers returned (`partition` = block, no footer
-  *     reads) and then `_SUCCESS`, the commit point.
+  *   - part-written snapshots (PageRank), in two flavours that share the
+  *     layout. The driver empties `iter=K` with [[clear]], the blocks'
+  *     `(id, rank)` rows are written with [[CheckpointStore.writePart]] to
+  *     `part-<block>.parquet`, and then [[commit]] writes the metrics file
+  *     from the row counts the writers returned (`partition` = block, no
+  *     footer reads) and then `_SUCCESS`, the commit point. On GridBlocks
+  *     each task of the superstep writes its block (a retried task
+  *     overwrites its own file) and the commit follows the superstep's
+  *     action; the driver kernel writes its contiguous slot blocks itself,
+  *     one thread per block, and commits when they are all written.
   *
   * Metrics are one small file written through the Hadoop `FileSystem` on the
   * driver (no shuffle, no parquet append), under a `_tmp-` name and then

@@ -5,7 +5,8 @@ import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The collected-graph format of the driver kernels: numbering rules, CSR
-  * fill order and the out-of-range `require`. Plain arrays, no Spark job.
+  * fill order and the out-of-range `require` on plain arrays, and the
+  * packed-column collect against `collect()`'s rows.
   */
 class LocalGraphSpec extends AnyFunSuite {
 
@@ -76,5 +77,34 @@ class LocalGraphSpec extends AnyFunSuite {
     val lg = LocalGraph(rows((0L, 1L, 1.0)))
     val e2 = intercept[IllegalArgumentException](lg.slot(5L))
     assert(e2.getMessage.contains("endpoint 5") && e2.getMessage.contains("n = 2"), e2.getMessage)
+  }
+
+  test("packed-column collect == numbered(collect()): several partitions, sparse ids, one job") {
+    val spark = TestSession.spark
+    import org.apache.spark.sql.types._
+    val es = Seq((1000L, -7L, 2.0), (-7L, 3L, 1.0), (3L, 1000L, 0.5), (12L, -7L, 1.0), (-40L, 12L, 3.0),
+      (3L, -40L, 1.0), (1000L, 77L, 1.0), (-40L, 77L, 1.0), (77L, 77L, 4.0))
+    val schema = StructType(Seq(StructField("src", LongType), StructField("dst", LongType),
+      StructField("weight", DoubleType)))
+    // 12 slices for 9 rows: some partitions are empty; unweighted rows carry weight 1.0
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows(es: _*).toSeq, 12), schema)
+    val unit = spark.createDataFrame(spark.sparkContext.parallelize(rows(es.map(e => (e._1, e._2, 1.0)): _*).toSeq, 5), schema)
+    for (frame <- Seq(df, unit)) {
+      val want = LocalGraph.numbered(frame.collect(), None)
+      val (got, jobs) = JobCounter(spark)(LocalGraph.collect(frame, None))
+      assert(jobs.size == 1)
+      assert(got.ids.toSeq == want.ids.toSeq && got.ids.toSeq == Seq(1000L, -7L, 3L, 12L, -40L, 77L))
+      assert(got.src.toSeq == want.src.toSeq && got.dst.toSeq == want.dst.toSeq)
+      assert(got.weight.toSeq == want.weight.toSeq)
+    }
+    val pairs = LocalGraph.collect(df.select("src", "dst"), None)
+    assert(pairs.src.toSeq == LocalGraph.numbered(df.collect(), None).src.toSeq)
+    assert(intercept[IllegalArgumentException](pairs.weight).getMessage.contains("no weight column"))
+
+    val dense = spark.createDataFrame(spark.sparkContext.parallelize(rows((0L, 2L, 1.0), (2L, 1L, 1.0), (1L, 0L, 2.0)).toSeq, 3), schema)
+    val range = LocalGraph.collect(dense, Some(4L))
+    assert(range.ids.toSeq == (0L until 4L) && range.src.toSeq == Seq(0, 2, 1) && range.dst.toSeq == Seq(2, 1, 0))
+    val e = intercept[IllegalArgumentException](LocalGraph.collect(dense, Some(2L)))
+    assert(e.getMessage.contains("endpoint 2") && e.getMessage.contains("n = 2"), e.getMessage)
   }
 }

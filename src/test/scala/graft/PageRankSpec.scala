@@ -152,7 +152,8 @@ class PageRankSpec extends AnyFunSuite {
       def run(iters: Int): (Int, Int) = {
         val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-floor").toString
         val (r, ids) = JobCounter(spark)(
-          PageRank.run(g, tol = 0.0, maxIter = iters, store = Some(new CheckpointStore(dir, "floor"))))
+          PageRank.run(g, tol = 0.0, maxIter = iters, store = Some(new CheckpointStore(dir, "floor")),
+            strategy = PageRank.GridBlocks(0)))
         assert(r.iterations == iters)
         (ids.size, ids.filter(_ != null).distinct.size)
       }
@@ -178,7 +179,8 @@ class PageRankSpec extends AnyFunSuite {
     val store = new CheckpointStore(java.nio.file.Files.createTempDirectory("graft-sparse").toString, "sparse")
     val iters = 9
     // tol 0 never stops early: tolerance mode for exactly `iters` supersteps
-    val dist = PageRank.run(g, tol = 0.0, maxIter = iters, reset = reset, store = Some(store))
+    val dist = PageRank.run(g, tol = 0.0, maxIter = iters, reset = reset, store = Some(store),
+      strategy = PageRank.GridBlocks(0))
     assert(dist.iterations == iters)
     val kern = PageRank.run(g, fixedIters = Some(iters), reset = reset)
     def m(df: org.apache.spark.sql.DataFrame) = df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
@@ -187,6 +189,91 @@ class PageRankSpec extends AnyFunSuite {
     assert(d.keySet == k.keySet && snap.keySet == k.keySet)
     assert(k.keys.map(id => math.abs(d(id) - k(id))).max < 1e-9, s"grid $d vs kernel $k")
     assert(k.keys.map(id => math.abs(snap(id) - k(id))).max < 1e-9, s"snapshot $snap vs kernel $k")
+  }
+
+  test("driver kernel job floor: the same jobs at 2 and 6 supersteps, at most 3 in all, durable and in memory") {
+    val g = danglingGraph
+    // tol 0 never stops early, so two runs differ only in supersteps
+    def jobs(iters: Int, durable: Boolean): Int = {
+      val store = if (!durable) None
+        else Some(new CheckpointStore(java.nio.file.Files.createTempDirectory("graft-kernel-floor").toString, "floor"))
+      val (r, ids) = JobCounter(spark)(PageRank.run(g, tol = 0.0, maxIter = iters, store = store))
+      assert(r.iterations == iters && r.perIterSec.size == iters)
+      ids.size
+    }
+    for (durable <- Seq(false, true)) {
+      val (j2, j6) = (jobs(2, durable), jobs(6, durable))
+      info(s"durable = $durable: $j2 jobs at 2 supersteps, $j6 at 6")
+      assert(j2 == j6 && j6 <= 3, s"durable = $durable")
+    }
+  }
+
+  private def personalized(n: Int): Option[org.apache.spark.sql.DataFrame] =
+    Some((0 until n).map(i => (i.toLong, if (i % 3 == 0) 1.0 else 0.0)).toDF("id", "reset"))
+
+  private def rankMap(df: org.apache.spark.sql.DataFrame): Map[Long, Double] =
+    df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+
+  test("driver kernel snapshots: load(K) == a fixed-iteration run stopped at K, metrics sum to n rows per iteration") {
+    val g = danglingGraph
+    for (reset <- Seq(None, personalized(7))) {
+      val store = new CheckpointStore(java.nio.file.Files.createTempDirectory("graft-kernel-snap").toString, "snap")
+      val dur = PageRank.run(g, tol = 0.0, maxIter = 4, reset = reset, store = Some(store))
+      assert(dur.iterations == 4 && store.latestIter(spark).contains(4))
+      for (k <- 1 to 4) {
+        val mem = rankMap(PageRank.run(g, fixedIters = Some(k), reset = reset).ranks)
+        val snap = rankMap(store.load(spark, k))
+        assert(snap.keySet == mem.keySet, s"iter $k")
+        assert(mem.keys.map(id => math.abs(snap(id) - mem(id))).max < 1e-12, s"iter $k, reset = ${reset.isDefined}")
+      }
+      assert(store.load(spark, 4).schema.map(f => (f.name, f.dataType.simpleString)) ==
+        Seq("id" -> "bigint", "rank" -> "double"))
+      val rows = store.metrics(spark).groupBy("iter").agg(sum("rows")).collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      assert(rows == (1 to 4).map(_ -> 7L).toMap)
+    }
+  }
+
+  test("resume across paths: a grid snapshot resumes on the driver kernel, a kernel snapshot on the grid") {
+    val g = danglingGraph
+    for (reset <- Seq(None, personalized(7));
+         (first, second) <- Seq(PageRank.GridBlocks(3) -> PageRank.EdgeJoin, PageRank.EdgeJoin -> PageRank.GridBlocks(3))) {
+      val full = PageRank.run(g, tol = 1e-10, maxIter = 300, reset = reset)
+      val store = new CheckpointStore(java.nio.file.Files.createTempDirectory("graft-cross").toString, "cross")
+      PageRank.run(g, tol = 1e-10, maxIter = 300, reset = reset, fixedIters = Some(5), store = Some(store),
+        strategy = first)
+      assert(store.latestIter(spark).contains(5))
+      val resumed = PageRank.resume(g, store, tol = 1e-10, maxIter = 300, reset = reset, strategy = second)
+      val what = s"$first -> $second, reset = ${reset.isDefined}"
+      assert(resumed.iterations == full.iterations && resumed.delta < 1e-10, what)
+      assert(store.latestIter(spark).contains(full.iterations), what)
+      val (a, b) = (rankMap(full.ranks), rankMap(resumed.ranks))
+      assert(a.keySet == b.keySet && a.keys.map(id => math.abs(a(id) - b(id))).max < 1e-9, what)
+    }
+  }
+
+  test("tolerance mode: driver kernel == GridBlocks(0) in iterations and at 1e-9 (dangling, weighted + personalized, sparse ids)") {
+    val weighted = LinkGraph.weighted(spark, 60, (0 until 500).map { k =>
+      val a = graft.ingest.Pages.mix64(7L + k)
+      (java.lang.Long.remainderUnsigned(a, 60L), java.lang.Long.remainderUnsigned(graft.ingest.Pages.mix64(a), 60L),
+        1.0 + java.lang.Long.remainderUnsigned(a, 5L).toDouble)
+    }, directed = true)
+    // ids -40, -7, 3, 12, 1000, 77; 77 is dangling; 555 is a reset id outside the vertex set
+    val sparse = LinkGraph(Seq((-7L, 3L), (3L, 1000L), (1000L, -7L), (12L, -7L), (-40L, 12L), (3L, -40L),
+      (1000L, 77L), (-40L, 77L)).toDF("src", "dst"), directed = true)
+    val cases = Seq(
+      ("dangling", danglingGraph, None, 0.85),
+      ("weighted + personalized", weighted, personalized(60), 0.5),
+      ("sparse ids", sparse, Some(Seq((-7L, 2.0), (12L, 1.0), (77L, 1.0), (555L, 1.0)).toDF("id", "reset")), 0.85))
+    for ((name, g, reset, damping) <- cases) {
+      val kern = PageRank.run(g, damping = damping, tol = 1e-10, maxIter = 300, reset = reset)
+      val grid = PageRank.run(g, damping = damping, tol = 1e-10, maxIter = 300, reset = reset,
+        strategy = PageRank.GridBlocks(0))
+      assert(kern.iterations == grid.iterations && kern.delta < 1e-10, name)
+      val (k, d) = (rankMap(kern.ranks), rankMap(grid.ranks))
+      assert(k.keySet == d.keySet, name)
+      assert(k.keys.map(id => math.abs(k(id) - d(id))).max < 1e-9, name)
+    }
   }
 
   test("fixed-iter driver kernel: an out-of-range endpoint fails naming the id and n") {

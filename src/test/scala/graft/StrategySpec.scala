@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** GridBlocks, PageRank's one distributed engine, against the fixed-iteration
   * driver kernel, an independent implementation of the same update: the
   * kernel is what the default strategy (`PageRank.EdgeJoin`, the name kept
-  * for the default) runs for a fixed-iteration in-memory run of this size.
+  * for the default) runs for any run of this size.
   * Each parity case runs the grid first and the kernel for the iterations
   * the grid took.
   */
